@@ -18,10 +18,15 @@ state side uses the shared ``state_hint`` policy (broadcast below 1M
 rows, ``shuffle_hash`` above — never a sort-merge on a growing loop
 state, and never an unbounded broadcast; see plans/superstep.py).
 ``localCheckpoint(eager=True)`` per superstep truncates the lineage
-tree exactly like every other iterative operator here.
+tree exactly like every other iterative operator here; the frontier
+size rides on that checkpoint job as an observed metric
+(``plans/superstep.observed_checkpoint``), so a superstep has no
+separate count action.
 
-The number of supersteps equals the true eccentricity of the source
-set, so BFS terminates when the frontier empties — no tolerance knob.
+The number of supersteps is the true eccentricity of the source set
+plus one (the superstep that finds the frontier empty) — no tolerance
+knob. A frontier still non-empty at the superstep cap raises
+``BFSBudgetExhausted``: a capped BFS never returns partial distances.
 Unreached vertices are absent from the output (callers can left-join
 the vertex universe if they want NULL/∞ rows).
 
@@ -37,7 +42,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.plans.superstep import state_hint
+from crgp_spark.plans.superstep import observed_checkpoint, state_hint
+
+
+class BFSBudgetExhausted(RuntimeError):
+    """The frontier was still non-empty after ``max_iterations``
+    supersteps: the returned distances would miss every vertex deeper
+    than the cap, so ``bfs_hops`` raises instead of truncating.
+    Callers with an O(log n) alternative (``euler.connectivity_substrate``)
+    catch it and switch paths."""
 
 
 def bfs_hops(
@@ -53,7 +66,9 @@ def bfs_hops(
 
     ``max_iterations`` caps the superstep count (default: the engine
     config's cap); the true fixpoint is reached when the frontier
-    empties, which for any finite graph happens within its diameter.
+    empties, which takes eccentricity + 1 supersteps. A frontier still
+    non-empty at the cap raises ``BFSBudgetExhausted`` — never a
+    silently partial ``dist``.
     """
     cfg = cfg or EngineConfig()
     cap = max_iterations or cfg.max_iterations
@@ -63,41 +78,50 @@ def bfs_hops(
         .repartition(cfg.shuffle_partitions, "src")
         .persist()
     )
-    dist = (
+    dist, m = observed_checkpoint(
         sources.select(F.col("vid").cast("long").alias("vid"))
         .distinct()
-        .withColumn("dist", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
+        .withColumn("dist", F.lit(0).cast("int")),
+        "bfs_hops sources it=0",
+        n=F.count(F.lit(1)),
     )
     frontier = dist
-    n_state = dist.count()
+    n_state = m["n"]
 
-    for it in range(cap):
-        # frontier ⋈ edges on src: the frontier is the (usually small)
-        # state side; candidates dedupe before the anti-join so the
-        # state join sees each target once
-        nxt = (
-            e.join(
-                state_hint(frontier.select("vid"), n_state),
-                e.src == F.col("vid"),
-                "left_semi",
+    try:
+        for it in range(cap):
+            # frontier ⋈ edges on src: the frontier is the (usually
+            # small) state side; candidates dedupe before the anti-join
+            # so the state join sees each target once
+            nxt, m = observed_checkpoint(
+                e.join(
+                    state_hint(frontier.select("vid"), n_state),
+                    e.src == F.col("vid"),
+                    "left_semi",
+                )
+                .select(F.col("dst").alias("vid"))
+                .distinct()
+                .join(state_hint(dist.select("vid"), n_state), "vid", "left_anti")
+                .withColumn("dist", F.lit(it + 1).cast("int")),
+                f"bfs_hops frontier it={it + 1}",
+                n=F.count(F.lit(1)),
             )
-            .select(F.col("dst").alias("vid"))
-            .distinct()
-            .join(state_hint(dist.select("vid"), n_state), "vid", "left_anti")
-            .withColumn("dist", F.lit(it + 1).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        n_new = nxt.count()
-        if n_new == 0:
-            break
-        # no re-checkpoint of the accumulated state: dist stays a
-        # shallow union of the already-checkpointed per-round frontiers
-        # (K leaves after K rounds), so growing it is free — only the
-        # new frontier ever materializes
-        dist = dist.unionByName(nxt)
-        frontier = nxt
-        n_state += n_new
-
-    e.unpersist()
+            n_new = m["n"]
+            if n_new == 0:
+                break
+            # no re-checkpoint of the accumulated state: dist stays a
+            # shallow union of the already-checkpointed per-round
+            # frontiers (K leaves after K rounds), so growing it is free
+            # — only the new frontier ever materializes
+            dist = dist.unionByName(nxt)
+            frontier = nxt
+            n_state += n_new
+        else:
+            raise BFSBudgetExhausted(
+                f"bfs_hops: {n_new} vertices still on the frontier after "
+                f"{cap} supersteps; raise max_iterations above the "
+                "source set's eccentricity"
+            )
+    finally:
+        e.unpersist()
     return dist

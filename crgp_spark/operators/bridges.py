@@ -76,11 +76,15 @@ def bfs_forest(
     edges: DataFrame,
     cfg: EngineConfig | None = None,
     max_iterations: int | None = None,
+    comp: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic BFS spanning forest of the undirected graph:
     ``(vid, comp, dist, parent)`` — one row per vertex touched by an
     edge, ``parent`` NULL exactly at the roots (the component-minimum
-    vertices)."""
+    vertices). Raises ``bfs.BFSBudgetExhausted`` when the BFS does not
+    drain within ``max_iterations`` supersteps. ``comp``, if given, is
+    the already-materialized ``(vid, component)`` labelling of the same
+    graph, used instead of running connected components here."""
     cfg = cfg or EngineConfig()
     und = _canonical(edges).persist()
     adj = (
@@ -88,35 +92,41 @@ def bfs_forest(
         .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
         .persist()
     )
-    comp = connected_components(
-        spark, und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        cfg, algo_name="bridges_cc",
-    )
-    roots = comp.select(F.col("component").alias("vid")).distinct()
-    dist = bfs_hops(
-        spark,
-        adj.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        roots,
-        cfg,
-        max_iterations=max_iterations,
-    )
-    # parent(v) = MIN neighbor one hop closer — unique-tree determinism
-    d0 = dist.select(F.col("vid").alias("pv"), F.col("dist").alias("pd"))
-    parents = (
-        dist.join(adj, dist.vid == adj.a)
-        .join(d0, (F.col("b") == F.col("pv")) & (F.col("pd") == dist.dist - 1))
-        .groupBy("vid", "dist")
-        .agg(F.min("b").alias("parent"))
-    )
-    out = (
-        comp.join(dist, "vid")
-        .join(parents.select("vid", "parent"), "vid", "left")
-        .select("vid", F.col("component").alias("comp"), "dist", "parent")
-    )
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    adj.unpersist()
-    return out
+    try:
+        if comp is None:
+            # checkpointed once: comp feeds both the BFS roots and the
+            # output join, and would otherwise re-run its final
+            # aggregation per branch
+            comp = connected_components(
+                spark,
+                und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+                cfg, algo_name="bridges_cc",
+            ).localCheckpoint(eager=True)
+        roots = comp.select(F.col("component").alias("vid")).distinct()
+        dist = bfs_hops(
+            spark,
+            adj.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+            roots,
+            cfg,
+            max_iterations=max_iterations,
+        )
+        # parent(v) = MIN neighbor one hop closer — unique-tree determinism
+        d0 = dist.select(F.col("vid").alias("pv"), F.col("dist").alias("pd"))
+        parents = (
+            dist.join(adj, dist.vid == adj.a)
+            .join(d0, (F.col("b") == F.col("pv")) & (F.col("pd") == dist.dist - 1))
+            .groupBy("vid", "dist")
+            .agg(F.min("b").alias("parent"))
+        )
+        return (
+            comp.join(dist, "vid")
+            .join(parents.select("vid", "parent"), "vid", "left")
+            .select("vid", F.col("component").alias("comp"), "dist", "parent")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        und.unpersist()
+        adj.unpersist()
 
 
 def bridges(

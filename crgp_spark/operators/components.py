@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
 from crgp_spark.plans.checkpoint import CheckpointManager
-from crgp_spark.plans.superstep import reset_stats, state_hint
+from crgp_spark.plans.superstep import (
+    observed_checkpoint,
+    reset_stats,
+    state_hint,
+)
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -75,14 +79,23 @@ def _small_star(e: DataFrame, n: int) -> DataFrame:
     return moved.unionByName(self_edges).distinct()
 
 
-def _checksum(e: DataFrame):
+def _digest_aggs() -> dict:
     # bit_xor: order-insensitive, overflow-free (ANSI mode) set digest;
     # valid because the edge set is deduplicated each round.
-    r = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))).alias("h"),
-    ).first()
-    return int(r["n"]), int(r["h"] or 0)
+    return {
+        "n": F.count(F.lit(1)),
+        "h": F.bit_xor(F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))),
+    }
+
+
+def _digest(m: dict) -> tuple[int, int]:
+    return int(m["n"]), int(m["h"] or 0)
+
+
+def _checksum(e: DataFrame) -> tuple[int, int]:
+    """Digest of an already-materialized edge set (resume path only;
+    the loop observes it on its checkpoint job)."""
+    return _digest(e.agg(*[c.alias(k) for k, c in _digest_aggs().items()]).first())
 
 
 def connected_components(
@@ -110,9 +123,14 @@ def connected_components(
         elif last is not None:
             e = cm.load_state(spark, last)
     if e is None:
-        e = _canon(edges).repartition(cfg.shuffle_partitions, "u").persist()
-
-    prev_sum = _checksum(e)
+        e, m = observed_checkpoint(
+            _canon(edges).repartition(cfg.shuffle_partitions, "u"),
+            f"{algo_name} canon it=0",
+            **_digest_aggs(),
+        )
+        prev_sum = _digest(m)
+    else:
+        prev_sum = _checksum(e)
     for it in range(start_it, cfg.max_iterations):
         # |V| <= 2*edges of the shrinking round edge set — a cheap upper
         # bound for the state-join hint, refreshed from the checksum
@@ -124,12 +142,13 @@ def connected_components(
         # (digit count doubles twice), which at O(log |V|) rounds on a
         # 10^12-vertex graph is a driver-side BigInteger blowup (see
         # plans/superstep.reset_stats).
-        e2 = reset_stats(
-            _small_star(_large_star(e, n_bound), n_bound).localCheckpoint(
-                eager=True
-            )
+        e2, m = observed_checkpoint(
+            _small_star(_large_star(e, n_bound), n_bound),
+            f"{algo_name} star it={it}",
+            **_digest_aggs(),
         )
-        cur_sum = _checksum(e2)
+        e2 = reset_stats(e2)
+        cur_sum = _digest(m)
         converged = cur_sum == prev_sum
 
         if it % cfg.checkpoint_every == 0 or converged:

@@ -41,21 +41,27 @@ from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
 from crgp_spark.operators.components import connected_components
-from crgp_spark.plans.superstep import state_hint
+from crgp_spark.plans.superstep import (
+    _release_stale_checkpoints,
+    observed_checkpoint,
+    state_hint,
+)
 
 __all__ = ["component_diameters"]
 
 
 def _grouped_bfs(
     adj: DataFrame,
+    n_adj: int,
     sources: DataFrame,
-    n_hint: int,
     max_iterations: int,
 ) -> DataFrame:
     """Multi-instance BFS: ``sources (key, vid)`` seeds one BFS per
     ``key``; all instances advance in the same superstep.  Returns
     ``(key, vid, dist)`` for every reached vertex.  ``adj`` is the
-    symmetric ``(a, b)`` adjacency."""
+    symmetric ``(a, b)`` adjacency of ``n_adj`` (= 2|E|) rows, which
+    sizes its join hint."""
+    spark = adj.sparkSession
     dist = (
         sources.select("key", "vid")
         .distinct()
@@ -64,23 +70,25 @@ def _grouped_bfs(
     )
     frontier = dist
     for it in range(max_iterations):
-        nxt = (
+        nxt, m = observed_checkpoint(
             frontier.join(
                 state_hint(
-                    adj.select(F.col("a").alias("vid"), F.col("b")), n_hint
+                    adj.select(F.col("a").alias("vid"), F.col("b")), n_adj
                 ),
                 "vid",
             )
             .select("key", F.col("b").alias("vid"))
             .distinct()
             .join(dist.select("key", "vid"), ["key", "vid"], "left_anti")
-            .withColumn("dist", F.lit(it + 1).cast("int"))
-            .localCheckpoint(eager=True)
+            .withColumn("dist", F.lit(it + 1).cast("int")),
+            f"diameter bfs it={it + 1}",
+            n=F.count(F.lit(1)),
         )
-        if nxt.isEmpty():
+        if m["n"] == 0:
             return dist
         dist = dist.unionByName(nxt)
         frontier = nxt
+        _release_stale_checkpoints(spark, it)
     raise RuntimeError(
         f"grouped BFS did not drain in {max_iterations} supersteps — "
         "raise the budget for graphs of this eccentricity"
@@ -106,28 +114,32 @@ def component_diameters(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    adj = (
+    adj, m = observed_checkpoint(
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition(cfg.shuffle_partitions, "a")
-        .persist()
+        .repartition(cfg.shuffle_partitions, "a"),
+        "diameter adjacency it=0",
+        n=F.count(F.lit(1)),
     )
-    comp = connected_components(
-        spark,
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        cfg,
-        algo_name="diameter_cc",
-    ).select("vid", F.col("component").alias("comp")).localCheckpoint(
-        eager=True
+    n_adj = m["n"]
+    comp, m = observed_checkpoint(
+        connected_components(
+            spark,
+            und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+            cfg,
+            algo_name="diameter_cc",
+        ).select("vid", F.col("component").alias("comp")),
+        "diameter components it=0",
+        n=F.count(F.lit(1)),
     )
-    n = comp.count()
+    n = m["n"]
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("n_vertices"))
 
     # sweep 1: from every component root (= its min-vid label)
     roots = comp.filter(F.col("vid") == F.col("comp")).select(
         F.col("comp").alias("key"), "vid"
     )
-    b1 = _grouped_bfs(adj, roots, n, max_bfs_depth)
+    b1 = _grouped_bfs(adj, n_adj, roots, max_bfs_depth)
     # farthest vertex per component, deterministic (max dist, min vid)
     w = b1.groupBy("key").agg(
         F.max_by("vid", F.struct(F.col("dist"), (-F.col("vid")))).alias(
@@ -135,27 +147,28 @@ def component_diameters(
         )
     )
     # sweep 2: from w — the double-sweep lower bound AND the iFUB levels
-    b2 = _grouped_bfs(adj, w, n, max_bfs_depth).localCheckpoint(eager=True)
-    state = (
+    b2 = _grouped_bfs(adj, n_adj, w, max_bfs_depth).localCheckpoint(eager=True)
+    # a component stays open while iFUB cannot yet close it; the open
+    # count is observed on every state checkpoint
+    is_open = (F.col("lb") < 2 * (F.col("i") - 1)) & (F.col("i") >= 1)
+    state, m = observed_checkpoint(
         b2.groupBy(F.col("key").alias("comp"))
         .agg(F.max("dist").alias("lb"))
-        .withColumn("i", F.col("lb"))
-        .localCheckpoint(eager=True)
+        .withColumn("i", F.col("lb")),
+        "diameter ifub it=0",
+        n_open=F.count_if(is_open),
     )
     # levels (comp, vid, lvl) from w — the candidate schedule
     levels = b2.select(
         F.col("key").alias("comp"), "vid", F.col("dist").alias("lvl")
     ).localCheckpoint(eager=True)
 
-    for _ in range(max_ifub_rounds):
-        open_c = state.filter(
-            (F.col("lb") < 2 * (F.col("i") - 1)) & (F.col("i") >= 1)
-        )
-        if open_c.isEmpty():
+    for rnd in range(max_ifub_rounds):
+        if m["n_open"] == 0:
             break
         # batch: every open component's level-i vertices get an
         # eccentricity via one grouped BFS keyed by candidate vid
-        oc = open_c.select(
+        oc = state.filter(is_open).select(
             F.col("comp").alias("_oc"), F.col("i").alias("_oi")
         )
         cands = (
@@ -166,7 +179,7 @@ def component_diameters(
             .select(F.col("vid").alias("key"), F.col("vid"))
         )
         eccs = (
-            _grouped_bfs(adj, cands, n, max_bfs_depth)
+            _grouped_bfs(adj, n_adj, cands, max_bfs_depth)
             .groupBy("key")
             .agg(F.max("dist").alias("ecc"))
             .join(
@@ -183,16 +196,15 @@ def component_diameters(
             "i",
         )
         # descend only while still open AGAINST THE NEW lower bound
-        state = folded.select(
-            "comp",
-            "lb",
-            F.when(
-                (F.col("lb") < 2 * (F.col("i") - 1)) & (F.col("i") >= 1),
-                F.col("i") - 1,
-            )
-            .otherwise(F.col("i"))
-            .alias("i"),
-        ).localCheckpoint(eager=True)
+        state, m = observed_checkpoint(
+            folded.select(
+                "comp",
+                "lb",
+                F.when(is_open, F.col("i") - 1).otherwise(F.col("i")).alias("i"),
+            ),
+            f"diameter ifub it={rnd + 1}",
+            n_open=F.count_if(is_open),
+        )
     else:
         raise RuntimeError(
             f"iFUB did not close every component in {max_ifub_rounds} "
@@ -209,5 +221,4 @@ def component_diameters(
         .select("comp", "n_vertices", "diameter")
         .localCheckpoint(eager=True)
     )
-    adj.unpersist()
     return out

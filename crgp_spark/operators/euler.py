@@ -50,8 +50,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
+from crgp_spark.operators.bfs import BFSBudgetExhausted
 from crgp_spark.plans.superstep import (
     _release_stale_checkpoints,
+    observed_checkpoint,
     reset_stats,
     state_hint,
 )
@@ -66,10 +68,10 @@ __all__ = [
 #: Superstep budget for the shallow-regime BFS forest.  BFS is
 #: O(diameter) supersteps — the right construction for the small-world
 #: target graphs (measured depth 2 at sf0.1) and the one the DuckDB
-#: oracles replay, but a scale trap on deep graphs.  If BFS has not
-#: reached every vertex within this budget, `connectivity_substrate`
-#: falls back to the O(log n)-superstep deep path (Borůvka forest +
-#: unrooted Euler rooting).
+#: oracles replay, but a scale trap on deep graphs.  If the BFS
+#: frontier has not drained within this budget (`bfs.BFSBudgetExhausted`),
+#: `connectivity_substrate` falls back to the O(log n)-superstep deep
+#: path (Borůvka forest + unrooted Euler rooting).
 BFS_FOREST_BUDGET = 48
 
 #: Below this forest depth the whole substrate compiles to one lazy
@@ -430,11 +432,15 @@ def _substrate_listrank(
     ascending-vid child order of the unrolled path), pointer-doubled
     list ranking, prefix counts for dense preorder, sparse-table
     doubling for subtree min/max."""
-    forest = forest.localCheckpoint(eager=True)
+    forest, m = observed_checkpoint(
+        forest,
+        "euler listrank forest it=0",
+        n_children=F.count_if(F.col("parent").isNotNull()),
+    )
     children = forest.filter(F.col("parent").isNotNull()).select(
         "vid", "parent", "comp"
     )
-    n_children = children.count()
+    n_children = m["n_children"]
     if n_children == 0:
         # forest of isolated roots: every vertex its own interval
         return forest.select(
@@ -466,9 +472,7 @@ def _substrate_listrank(
         "comp",
         F.col("parent").alias("t"),
         F.col("vid").alias("h"),
-        F.when(F.col("_fc").isNotNull(), F.col("vid"))
-        .otherwise(F.col("vid"))
-        .alias("nt"),
+        F.col("vid").alias("nt"),
         F.coalesce(F.col("_fc"), F.col("parent")).alias("nh"),
     )
     up = ch.select(
@@ -634,46 +638,61 @@ def connectivity_substrate(
 
     cfg = cfg or EngineConfig()
     und = und.localCheckpoint(eager=True)
-    n_verts = (
-        und.select(F.col("u").alias("vid"))
-        .unionByName(und.select(F.col("v").alias("vid")))
-        .distinct()
-        .count()
-    )
-    forest = bfs_forest(
-        spark,
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        cfg,
-        max_iterations=bfs_budget,
-    )
-    if forest.count() == n_verts:
-        tree = forest.filter(F.col("parent").isNotNull()).select(
-            F.least("vid", "parent").alias("u"),
-            F.greatest("vid", "parent").alias("v"),
+    # one components run serves both regimes: the BFS roots, and the
+    # root test of the deep path's Euler rooting
+    comp = _components(spark, und, cfg)
+    try:
+        forest = bfs_forest(
+            spark,
+            und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+            cfg,
+            max_iterations=bfs_budget,
+            comp=comp,
         )
-        nontree = und.join(tree, ["u", "v"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        return interval_substrate(spark, forest, nontree, cfg)
-    return _deep_substrate(spark, und, cfg)
+    except BFSBudgetExhausted:
+        # the roots are every component's minimum vertex, so a BFS that
+        # drains within the budget reaches every vertex: the drain
+        # signal IS the coverage check
+        return _deep_substrate(spark, und, cfg, comp)
+    tree = forest.filter(F.col("parent").isNotNull()).select(
+        F.least("vid", "parent").alias("u"),
+        F.greatest("vid", "parent").alias("v"),
+    )
+    nontree = und.join(tree, ["u", "v"], "left_anti").localCheckpoint(
+        eager=True
+    )
+    return interval_substrate(spark, forest, nontree, cfg)
 
 
-def _deep_substrate(
+def _components(
     spark: SparkSession, und: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
-    """Deep-graph substrate: Borůvka forest + unrooted Euler rooting —
-    O(log V) supersteps end to end, never O(depth)."""
+    """``(vid, component)`` of ``und``, checkpointed: it feeds several
+    branches downstream."""
     from crgp_spark.operators.components import connected_components
-    from crgp_spark.operators.msf import minimum_spanning_forest
 
-    comp = connected_components(
+    return connected_components(
         spark,
         und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
         cfg,
         algo_name="euler_cc",
-    ).select("vid", F.col("component").alias("comp")).localCheckpoint(
-        eager=True
-    )
+    ).localCheckpoint(eager=True)
+
+
+def _deep_substrate(
+    spark: SparkSession,
+    und: DataFrame,
+    cfg: EngineConfig,
+    comp: DataFrame | None = None,
+) -> DataFrame:
+    """Deep-graph substrate: Borůvka forest + unrooted Euler rooting —
+    O(log V) supersteps end to end, never O(depth). ``comp`` is the
+    ``(vid, component)`` labelling of ``und`` if the caller has it."""
+    from crgp_spark.operators.msf import minimum_spanning_forest
+
+    if comp is None:
+        comp = _components(spark, und, cfg)
+    comp = comp.select("vid", F.col("component").alias("comp"))
     # w = 0 everywhere: the (w, u, v) total order makes this the unique
     # lexicographic-minimum spanning forest — deterministic
     fe = minimum_spanning_forest(
@@ -683,8 +702,11 @@ def _deep_substrate(
             F.lit(0).alias("w"),
         ),
         cfg,
-    ).select("u", "v").localCheckpoint(eager=True)
-    n_tree = fe.count()
+    ).select("u", "v")
+    fe, m = observed_checkpoint(
+        fe, "euler deep forest it=0", n=F.count(F.lit(1))
+    )
+    n_tree = m["n"]
     nontree = und.join(fe, ["u", "v"], "left_anti").localCheckpoint(
         eager=True
     )

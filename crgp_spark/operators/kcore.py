@@ -26,15 +26,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.plans.superstep import state_hint
+from crgp_spark.plans.superstep import observed_checkpoint, state_hint
 
 
-def _checksum(e: DataFrame):
-    r = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-    ).first()
-    return int(r["n"]), int(r["h"] or 0)
+def _digest_aggs() -> dict:
+    # order-insensitive digest of a deduplicated edge set, observed on
+    # the round's checkpoint job (no aggregate action of its own)
+    return {"n": F.count(F.lit(1)), "h": F.bit_xor(F.xxhash64("u", "v"))}
+
+
+def _digest(m: dict) -> tuple[int, int]:
+    return int(m["n"]), int(m["h"] or 0)
 
 
 def kcore(
@@ -59,29 +61,30 @@ def kcore(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    e = (
+    e, m = observed_checkpoint(
         und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(cfg.shuffle_partitions if cfg else 32, "u")
-        .localCheckpoint(eager=True)
+        .repartition(cfg.shuffle_partitions if cfg else 32, "u"),
+        "kcore edges it=0",
+        **_digest_aggs(),
     )
-    prev = _checksum(e)
+    prev = _digest(m)
     max_rounds = fixed_rounds if fixed_rounds is not None else 10_000
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    for _ in range(max_rounds):
+    for it in range(max_rounds):
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
         n_bound = prev[0]  # |keep| <= |directed edge rows|
-        e = (
-            e.join(state_hint(keep, n_bound), "u", "left_semi")
-            .join(
+        # localCheckpoint truncates the per-round plan (superstep.py)
+        e, m = observed_checkpoint(
+            e.join(state_hint(keep, n_bound), "u", "left_semi").join(
                 state_hint(keep.withColumnRenamed("u", "v"), n_bound),
                 "v",
                 "left_semi",
-            )
-            # localCheckpoint truncates the per-round plan (superstep.py)
-            .localCheckpoint(eager=True)
+            ),
+            f"kcore peel it={it + 1}",
+            **_digest_aggs(),
         )
-        cur = _checksum(e)
+        cur = _digest(m)
         if fixed_rounds is None and cur == prev:
             break
         prev = cur

@@ -24,15 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
+from crgp_spark.operators.kcore import _digest, _digest_aggs
 from crgp_spark.operators.triangles import oriented_edges
-
-
-def _checksum(e: DataFrame):
-    r = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-    ).first()
-    return int(r["n"]), int(r["h"] or 0)
+from crgp_spark.plans.superstep import observed_checkpoint
 
 
 def edge_support(und: DataFrame) -> DataFrame:
@@ -85,28 +79,29 @@ def ktruss(
     peel rounds (edges whose round-R support is >= k-2, with that
     support) — deterministic and SQL-replayable; the fixpoint result is
     the true k-truss."""
-    und = (
+    und, m = observed_checkpoint(
         edges.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .repartition(cfg.shuffle_partitions if cfg else 32, "u")
-        .localCheckpoint(eager=True)
+        .repartition(cfg.shuffle_partitions if cfg else 32, "u"),
+        "ktruss edges it=0",
+        **_digest_aggs(),
     )
-    prev = _checksum(und)
+    prev = _digest(m)
     max_rounds = fixed_rounds if fixed_rounds is not None else 10_000
     sup = edge_support(und)
-    for _ in range(max_rounds):
+    for it in range(max_rounds):
         sup = edge_support(und)
-        und = (
-            sup.filter(F.col("support") >= k - 2)
-            .select("u", "v")
-            # plan-tree truncation per round, as in every iterative op
-            .localCheckpoint(eager=True)
+        # plan-tree truncation per round, as in every iterative op
+        und, m = observed_checkpoint(
+            sup.filter(F.col("support") >= k - 2).select("u", "v"),
+            f"ktruss peel it={it + 1}",
+            **_digest_aggs(),
         )
-        cur = _checksum(und)
+        cur = _digest(m)
         if fixed_rounds is None and cur == prev:
             break
         prev = cur

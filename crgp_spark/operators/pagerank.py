@@ -42,6 +42,8 @@ from crgp_spark.plans.superstep import (
     BROADCAST_STATE_MAX_VERTICES,  # noqa: F401  (re-export; policy + docs live in superstep.py)
     LoopResult,
     StepOutcome,
+    _release_stale_checkpoints,
+    observed_checkpoint as _observed_checkpoint,
     run_loop,
     state_hint as _state_hint,
 )
@@ -287,83 +289,75 @@ def pagerank_df(
         .repartition(cfg.shuffle_partitions, "src")
         .persist()
     )
-    e.count()
-    verts = vertex_universe(edges, cfg).persist()
-    n = verts.count()
+    # Loop state (vid, rank, _dangling) over the whole vertex universe.
+    # The static dangling flag (no out-edge) rides along, so each step's
+    # ONE left join state ⋈ Σmessages yields the new rank, its delta
+    # against the old rank and the next step's dangling mass; the two
+    # scalars are observed on the step's checkpoint job.
+    flags = (
+        vertex_universe(edges, cfg)
+        .join(
+            deg.select(F.col("src").alias("vid"), F.lit(True).alias("_out")),
+            "vid",
+            "left",
+        )
+        .select("vid", F.col("_out").isNull().alias("_dangling"))
+        .persist()
+    )
+    r = flags.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_if("_dangling").alias("n_dangling"),
+    ).first()
+    n = int(r["n"])
     if cfg.tol_mode == "scaled":
         tol = tol / n
-    # vertices with no out-edges (dangling) — static
-    dangling_vids = verts.join(
-        deg.select(F.col("src").alias("vid")), "vid", "left_anti"
-    ).persist()
+    ranks = flags.withColumn("rank", F.lit(1.0 / n))
+    dang = r["n_dangling"] / n
 
-    ranks = verts.select("vid", F.lit(1.0 / n).alias("rank")).persist()
-    ranks.count()
-
+    partial = (
+        F.col("rank") / F.col("out_deg")
+        if weight_col is None
+        else F.col("rank") * F.col(weight_col) / F.col("out_deg")
+    )
     n_iter = fixed_iterations or max_iterations or cfg.max_iterations
-    for _it in range(n_iter):
-        # The dangling-mass scalar is part of THIS plan (1-row aggregate,
-        # broadcast cross join), so each iteration is exactly ONE job —
-        # no separate driver action for the scalar.
-        dang = (
-            ranks.join(_state_hint(dangling_vids, n), "vid", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
-        # shuffle_hash: broadcasting the |V|-row state per iteration is
-        # the wrong plan at any scale (see the CSR step comment).
-        partial = (
-            F.col("rank") / F.col("out_deg")
-            if weight_col is None
-            else F.col("rank") * F.col(weight_col) / F.col("out_deg")
-        )
-        msgs = e.join(_state_hint(ranks, n), e["src"] == ranks["vid"]).select(
-            "dst", partial.alias("partial")
-        )
+    for it in range(n_iter):
+        # shuffle_hash above the broadcast cap: broadcasting the |V|-row
+        # state per iteration is the wrong plan at scale (see the CSR
+        # step comment and plans/superstep.state_hint).
+        msgs = e.join(
+            _state_hint(ranks.select("vid", "rank"), n),
+            F.col("src") == F.col("vid"),
+        ).select("dst", partial.alias("partial"))
         sums = msgs.groupBy("dst").agg(F.sum("partial").alias("in_contrib"))
-        new_ranks = (
-            verts.join(_state_hint(sums, n), verts["vid"] == sums["dst"], "left")
-            .crossJoin(F.broadcast(dang))
+        rank_new = F.lit((1.0 - alpha) / n) + F.lit(alpha) * (
+            F.coalesce(F.col("in_contrib"), F.lit(0.0)) + F.lit(dang / n)
+        )
+        # 4 jobs per step at sf0.01-like sizes (broadcast of the state,
+        # the message shuffle, broadcast of the sums, the checkpoint);
+        # the scalars add none
+        ranks, m = _observed_checkpoint(
+            ranks.join(_state_hint(sums, n), F.col("vid") == F.col("dst"), "left")
             .select(
                 "vid",
-                (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce(F.col("in_contrib"), F.lit(0.0))
-                        + F.col("_dang") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)  # materialize + truncate plan
+                "_dangling",
+                F.col("rank").alias("_old"),
+                rank_new.alias("rank"),
+            ),
+            f"pagerank_df step it={it}",
+            columns=["vid", "rank", "_dangling"],
+            delta=F.max(F.abs(F.col("rank") - F.col("_old"))),
+            dang=F.sum(F.when(F.col("_dangling"), F.col("rank"))),
         )
-        if fixed_iterations is None:
-            delta = (
-                new_ranks.join(
-                    _state_hint(
-                        ranks.select("vid", F.col("rank").alias("r0")), n
-                    ),
-                    "vid",
-                )
-                .agg(F.max(F.abs(F.col("rank") - F.col("r0"))))
-                .first()[0]
-            )
-            ranks.unpersist()
-            ranks = new_ranks
-            if float(delta or 0.0) < tol:
-                break
-        else:
-            ranks.unpersist()
-            ranks = new_ranks
+        dang = float(m["dang"] or 0.0)
+        if fixed_iterations is None and float(m["delta"] or 0.0) < tol:
+            break
         # stale localCheckpoint blocks OOM bounded executor heaps in
         # long runs — see plans/superstep._release_stale_checkpoints
-        from crgp_spark.plans.superstep import _release_stale_checkpoints
-
-        _release_stale_checkpoints(spark, _it)
+        _release_stale_checkpoints(spark, it)
 
     e.unpersist()
-    verts.unpersist()
-    dangling_vids.unpersist()
-    return ranks
+    flags.unpersist()
+    return ranks.select("vid", "rank")
 
 
 def personalized_pagerank(
@@ -379,12 +373,15 @@ def personalized_pagerank(
     the conversation originators (the recommendation/expansion primitive
     built on the same reconstructed cascade edges).
 
-    Same plan shape as ``pagerank_df`` (one job per iteration: dangling
-    scalar folded in via a broadcast 1-row cross-join, ``state_hint``-ed
-    per-iteration joins, ``localCheckpoint`` truncation); the restart
-    vector is uniform over sources.  Fixed iteration count — the driver
-    oracle unrolls the identical recurrence in SQL.  Returns
-    ``(vid, rank)``."""
+    The loop state ``(vid, rank, is_src, _dangling)`` carries the
+    static source and dangling flags, so an iteration is one left join
+    state ⋈ Σmessages, and the next iteration's dangling mass is
+    observed on the iteration's checkpoint job (as in ``pagerank_df``);
+    under AQE each exchange and broadcast is a job of its own, so an
+    iteration costs 4 Spark jobs (broadcast of the state, the message
+    shuffle, broadcast of the sums, the checkpoint). The restart vector
+    is uniform over sources.  Fixed iteration count — the driver oracle
+    unrolls the identical recurrence in SQL.  Returns ``(vid, rank)``."""
     cfg = cfg or EngineConfig()
     alpha = cfg.damping
 
@@ -395,57 +392,54 @@ def personalized_pagerank(
         .repartition(cfg.shuffle_partitions, "src")
         .persist()
     )
-    verts = vertex_universe(edges, cfg).persist()
-    n = verts.count()
     src_set = sources.select(F.col("vid").cast("long").alias("vid")).distinct()
-    flagged = verts.join(
-        src_set.withColumn("_s", F.lit(1)), "vid", "left"
-    ).select("vid", F.coalesce("_s", F.lit(0)).alias("is_src")).persist()
-    s = flagged.agg(F.sum("is_src")).first()[0] or 0
+    flags = (
+        vertex_universe(edges, cfg)
+        .join(src_set.withColumn("_s", F.lit(1)), "vid", "left")
+        .join(
+            deg.select(F.col("src").alias("vid"), F.lit(True).alias("_out")),
+            "vid",
+            "left",
+        )
+        .select(
+            "vid",
+            F.coalesce("_s", F.lit(0)).alias("is_src"),
+            F.col("_out").isNull().alias("_dangling"),
+        )
+        .persist()
+    )
+    r = flags.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("is_src").alias("s"),
+        F.count_if(F.col("_dangling") & (F.col("is_src") == 1)).alias(
+            "s_dangling"
+        ),
+    ).first()
+    n, s = int(r["n"]), int(r["s"] or 0)
     if s == 0:
         raise ValueError("personalized_pagerank: no source vertex is in the graph")
-    dangling_vids = verts.join(
-        deg.select(F.col("src").alias("vid")), "vid", "left_anti"
-    ).persist()
 
-    ranks = flagged.select(
-        "vid", (F.col("is_src") / F.lit(float(s))).alias("rank")
-    ).localCheckpoint(eager=True)
+    ranks = flags.withColumn("rank", F.col("is_src") / F.lit(float(s)))
+    dang = r["s_dangling"] / float(s)
 
-    for _it in range(fixed_iterations):
-        dang = (
-            ranks.join(_state_hint(dangling_vids, n), "vid", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
-        msgs = e.join(_state_hint(ranks, n), e["src"] == ranks["vid"]).select(
-            "dst", (F.col("rank") / F.col("out_deg")).alias("partial")
-        )
+    for it in range(fixed_iterations):
+        msgs = e.join(
+            _state_hint(ranks.select("vid", "rank"), n),
+            F.col("src") == F.col("vid"),
+        ).select("dst", (F.col("rank") / F.col("out_deg")).alias("partial"))
         sums = msgs.groupBy("dst").agg(F.sum("partial").alias("in_contrib"))
-        ranks = (
-            flagged.join(
-                _state_hint(sums, n), flagged["vid"] == sums["dst"], "left"
-            )
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "vid",
-                (
-                    F.col("is_src")
-                    * (
-                        F.lit((1.0 - alpha) / s)
-                        + F.lit(alpha) * F.col("_dang") / F.lit(float(s))
-                    )
-                    + F.lit(alpha)
-                    * F.coalesce(F.col("in_contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+        rank_new = F.col("is_src") * (
+            F.lit((1.0 - alpha) / s) + F.lit(alpha) * F.lit(dang) / F.lit(float(s))
+        ) + F.lit(alpha) * F.coalesce(F.col("in_contrib"), F.lit(0.0))
+        ranks, m = _observed_checkpoint(
+            ranks.join(_state_hint(sums, n), F.col("vid") == F.col("dst"), "left")
+            .select("vid", "is_src", "_dangling", rank_new.alias("rank")),
+            f"personalized_pagerank step it={it}",
+            dang=F.sum(F.when(F.col("_dangling"), F.col("rank"))),
         )
-        from crgp_spark.plans.superstep import _release_stale_checkpoints
-
-        _release_stale_checkpoints(spark, _it)
+        dang = float(m["dang"] or 0.0)
+        _release_stale_checkpoints(spark, it)
 
     e.unpersist()
-    verts.unpersist()
-    flagged.unpersist()
-    dangling_vids.unpersist()
-    return ranks
+    flags.unpersist()
+    return ranks.select("vid", "rank")

@@ -38,9 +38,11 @@ Algorithm, per outer round on the remaining subgraph:
 Every phase is edges ⋈ state + map-side-combinable groupBy — no per-row
 Python; state-side joins go through ``plans/superstep.state_hint`` so
 |V|-row per-iteration tables are never broadcast at scale (CLAUDE.md
-policy). Convergence is one aggregate action per superstep (labels only
-decrease ⇒ sum strictly decreases until fixpoint). Plans are truncated
-per superstep with ``localCheckpoint(eager=True)``.
+policy). Plans are truncated per superstep with
+``localCheckpoint(eager=True)``, and convergence is decided by the label
+sum observed on that same checkpoint job (labels only decrease ⇒ sum
+strictly decreases until fixpoint; ``observed_checkpoint``) — no
+superstep runs a separate aggregate action.
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ from crgp_spark.config import EngineConfig
 from crgp_spark.plans.checkpoint import CheckpointManager
 from crgp_spark.plans.superstep import (
     _release_stale_checkpoints,
+    observed_checkpoint,
     reset_stats,
     state_hint,
 )
@@ -76,12 +79,13 @@ def _vertices(edges: DataFrame) -> DataFrame:
 
 
 def _trim(
-    edges: DataFrame, verts: DataFrame, n: int
-) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    edges: DataFrame, verts: DataFrame, n: int, rnd: int
+) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
     """Peel in-degree-0 / out-degree-0 vertices to fixpoint; they are
     singleton SCCs. Returns (remaining_edges, remaining_verts,
-    trimmed_labels, supersteps). Each peel is two semi-join degree
-    checks + one action; plans are truncated per peel."""
+    trimmed_labels, supersteps, remaining_vertex_count). Each peel is
+    one degree pass whose checkpoint job also counts the survivors;
+    plans are truncated per peel."""
     done_parts: DataFrame | None = None
     steps = 0
     n_verts = n
@@ -105,15 +109,17 @@ def _trim(
             .groupBy("vid")
             .agg(F.max("_out").alias("_out"), F.max("_in").alias("_in"))
         )
-        keep = (
-            deg.filter((F.col("_out") == 1) & (F.col("_in") == 1))
-            .select("vid")
-            .localCheckpoint(eager=True)
+        keep, m = observed_checkpoint(
+            deg.filter((F.col("_out") == 1) & (F.col("_in") == 1)).select(
+                "vid"
+            ),
+            f"scc trim r={rnd} it={steps}",
+            n=F.count(F.lit(1)),
         )
         steps += 1
-        n_keep = keep.count()
+        n_keep = m["n"]
         if n_keep == n_verts:
-            return edges, keep, done_parts, steps
+            return edges, keep, done_parts, steps, n_keep
         trimmed = verts.join(state_hint(keep, n_keep or 1), "vid", "left_anti")
         labels = trimmed.select("vid", F.col("vid").alias("scc"))
         # ``keep`` is checkpointed each peel, so the union over the tiny
@@ -125,7 +131,7 @@ def _trim(
         verts = keep
         n_verts = n_keep
         if n_verts == 0:
-            return edges.limit(0), verts, done_parts, steps
+            return edges.limit(0), verts, done_parts, steps, 0
         edges = (
             edges.join(
                 state_hint(verts.withColumnRenamed("vid", "src"), n_verts),
@@ -142,20 +148,23 @@ def _trim(
 
 
 def _forward_colors(
-    edges: DataFrame, verts: DataFrame, n: int, max_it: int
+    edges: DataFrame, verts: DataFrame, n: int, max_it: int, rnd: int
 ) -> tuple[DataFrame, int]:
     """Fixpoint of color(v) = min(v, min color over in-neighbors), with
     pointer jumping: each superstep also folds in color(color(v)) —
     valid because color(u) reaches u, so reachability composes — which
     makes the superstep count O(log diameter) instead of O(diameter).
     Colors only decrease, so sum(color) strictly decreases until the
-    fixpoint — one agg action per superstep decides convergence. The
-    combined operator's fixpoint is in particular an edge-step fixpoint,
-    which is what defines correctness."""
-    color = verts.select("vid", F.col("vid").alias("color")).localCheckpoint(
-        eager=True
+    fixpoint — the sum, observed on each superstep's checkpoint job,
+    decides convergence. The combined operator's fixpoint is in
+    particular an edge-step fixpoint, which is what defines
+    correctness."""
+    color, m = observed_checkpoint(
+        verts.select("vid", F.col("vid").alias("color")),
+        f"scc forward r={rnd} it=0",
+        s=F.sum("color"),
     )
-    prev = color.agg(F.sum("color")).first()[0]
+    prev = m["s"]
     for step in range(1, max_it + 1):
         msgs = (
             edges.join(
@@ -182,15 +191,16 @@ def _forward_colors(
         # reset_stats: the jump join is state ⋈ state — without it the
         # inherited size estimate SQUARES every superstep (see
         # plans/superstep.reset_stats).
-        color = reset_stats(
-            stepped.join(state_hint(jump, n), "color", "left")
-            .select(
+        color, m = observed_checkpoint(
+            stepped.join(state_hint(jump, n), "color", "left").select(
                 "vid",
                 F.least("color", F.coalesce("_jc", "color")).alias("color"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"scc forward r={rnd} it={step}",
+            s=F.sum("color"),
         )
-        cur = color.agg(F.sum("color")).first()[0]
+        color = reset_stats(color)
+        cur = m["s"]
         if cur == prev:
             return color, step
         prev = cur
@@ -201,7 +211,7 @@ def _forward_colors(
 
 
 def _backward_reach(
-    edges: DataFrame, color: DataFrame, n: int, max_it: int
+    edges: DataFrame, color: DataFrame, n: int, max_it: int, rnd: int
 ) -> tuple[DataFrame, int]:
     """Within each color class (edges restricted to same-color
     endpoints), min-propagate along the REVERSED class edges with
@@ -222,10 +232,12 @@ def _backward_reach(
         .select("src", "dst")
         .localCheckpoint(eager=True)
     )
-    reach = color.select("vid", "color", F.col("vid").alias("reach")).localCheckpoint(
-        eager=True
+    reach, m = observed_checkpoint(
+        color.select("vid", "color", F.col("vid").alias("reach")),
+        f"scc backward r={rnd} it=0",
+        s=F.sum("reach"),
     )
-    prev = reach.agg(F.sum("reach")).first()[0]
+    prev = m["s"]
     for step in range(1, max_it + 1):
         # reversed edge w->v for each forward v->w: v learns what w reaches
         msgs = (
@@ -251,16 +263,17 @@ def _backward_reach(
         jump = reach.select(
             F.col("vid").alias("reach"), F.col("reach").alias("_jr")
         )
-        reach = reset_stats(
-            stepped.join(state_hint(jump, n), "reach", "left")
-            .select(
+        reach, m = observed_checkpoint(
+            stepped.join(state_hint(jump, n), "reach", "left").select(
                 "vid",
                 "color",
                 F.least("reach", F.coalesce("_jr", "reach")).alias("reach"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"scc backward r={rnd} it={step}",
+            s=F.sum("reach"),
         )
-        cur = reach.agg(F.sum("reach")).first()[0]
+        reach = reset_stats(reach)
+        cur = m["s"]
         if cur == prev:
             return reach, step
         prev = cur
@@ -285,14 +298,16 @@ def strongly_connected_components(
     cm = CheckpointManager(cfg.checkpoint_dir, algo_name, cfg.snapshot_every)
 
     e = _canon(edges).repartition(cfg.shuffle_partitions, "src").persist()
-    verts = _vertices(e).localCheckpoint(eager=True)
-    n = verts.count()
+    verts, m = observed_checkpoint(
+        _vertices(e), f"{algo_name} vertices it=0", n=F.count(F.lit(1))
+    )
+    n = m["n"]
     done: DataFrame | None = None
 
     budget = cfg.max_iterations
     rnd = 0
     while n > 0 and budget > 0:
-        e, verts, trimmed, used = _trim(e, verts, n)
+        e, verts, trimmed, used, n = _trim(e, verts, n, rnd)
         budget -= used
         if trimmed is not None:
             done = (
@@ -300,12 +315,11 @@ def strongly_connected_components(
                 if done is None
                 else done.unionByName(trimmed).localCheckpoint(eager=True)
             )
-        n = verts.count()
         if n == 0:
             break
 
-        color, used_f = _forward_colors(e, verts, n, max(budget, 1))
-        reach, used_b = _backward_reach(e, color, n, max(budget, 1))
+        color, used_f = _forward_colors(e, verts, n, max(budget, 1), rnd)
+        reach, used_b = _backward_reach(e, color, n, max(budget, 1), rnd)
         budget -= used_f + used_b
 
         found = reach.filter(F.col("reach") == F.col("color")).select(
@@ -316,12 +330,12 @@ def strongly_connected_components(
             if done is None
             else done.unionByName(found).localCheckpoint(eager=True)
         )
-        verts = (
-            reach.filter(F.col("reach") != F.col("color"))
-            .select("vid")
-            .localCheckpoint(eager=True)
+        verts, m = observed_checkpoint(
+            reach.filter(F.col("reach") != F.col("color")).select("vid"),
+            f"{algo_name} remaining r={rnd}",
+            n=F.count(F.lit(1)),
         )
-        n_next = verts.count()
+        n_next = m["n"]
         e = (
             e.join(
                 state_hint(verts.withColumnRenamed("vid", "src"), max(n_next, 1)),
@@ -424,13 +438,15 @@ def condensation_layers(
     dag = condensation(
         spark, edges, cfg, scc_labels=labels
     ).localCheckpoint(eager=True)
-    nodes = labels.select("scc").distinct().localCheckpoint(eager=True)
-    n_nodes = nodes.count()
-
-    layers = nodes.withColumn("layer", F.lit(0).cast("long")).localCheckpoint(
-        eager=True
+    layers, m = observed_checkpoint(
+        labels.select("scc")
+        .distinct()
+        .withColumn("layer", F.lit(0).cast("long")),
+        "scc layers it=0",
+        n=F.count(F.lit(1)),
     )
-    for _ in range(max_rounds):
+    n_nodes = m["n"]
+    for it in range(max_rounds):
         relaxed = (
             dag.join(
                 state_hint(
@@ -441,25 +457,20 @@ def condensation_layers(
             .groupBy(F.col("dst_scc").alias("scc"))
             .agg((F.max("layer") + 1).alias("cand"))
         )
-        nxt = (
-            layers.join(state_hint(relaxed, n_nodes), "scc", "left")
-            .select(
+        # the number of raised layers rides on the checkpoint job
+        layers, m = observed_checkpoint(
+            layers.join(state_hint(relaxed, n_nodes), "scc", "left").select(
                 "scc",
+                F.col("layer").alias("_old"),
                 F.greatest(
                     "layer", F.coalesce("cand", F.lit(0).cast("long"))
                 ).alias("layer"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"scc layers it={it + 1}",
+            columns=["scc", "layer"],
+            changed=F.count_if(F.col("layer") != F.col("_old")),
         )
-        changed = (
-            nxt.withColumnRenamed("layer", "new_layer")
-            .join(layers, "scc")
-            .filter(F.col("new_layer") != F.col("layer"))
-            .limit(1)
-            .count()
-        )
-        layers = nxt
-        if changed == 0:
+        if m["changed"] == 0:
             return layers
     raise RuntimeError(
         f"condensation_layers: no fixpoint within {max_rounds} rounds "

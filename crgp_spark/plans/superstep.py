@@ -28,7 +28,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
@@ -90,6 +90,50 @@ def reset_stats(df: DataFrame) -> DataFrame:
         jdf.queryExecution().toRdd(), jdf.schema(), False
     )
     return DataFrame(new_jdf, df.sparkSession)
+
+
+def observed_checkpoint(
+    df: DataFrame,
+    label: str,
+    *,
+    columns: list[str] | None = None,
+    **metrics: Column,
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` with ``localCheckpoint(eager=True)`` and return
+    ``(checkpoint, values)``, where ``values`` maps each keyword of
+    ``metrics`` to its aggregate over ``df``'s rows. ``columns``, if
+    given, projects the checkpoint to those columns AFTER observing, so
+    a metric may read a column the state does not keep (the previous
+    rank of a convergence delta).
+
+    The aggregates ride on the checkpointing job as ``DataFrame.observe``
+    metrics, so a superstep's convergence scalars (row count, max delta,
+    checksum) cost no job of their own. A ``count()`` or ``agg().first()``
+    after the checkpoint would re-scan the rows in a second job, and
+    under AQE its partial-aggregate exchange is a third: per-superstep
+    job count is the floor of every iterative operator here. Aggregates
+    over zero rows follow SQL (``count`` 0, ``max``/``sum`` ``None``).
+
+    ``label`` (``"<operator> <phase> it=<k>"``) becomes the Spark job
+    description of the materializing job, so the status store names the
+    operator, phase and iteration of every superstep; the caller's
+    description is restored afterwards. The job GROUP is left alone —
+    callers (benchmarks, applications) attribute jobs by their own
+    group."""
+    obs = Observation()
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        out = df.observe(
+            obs, *[agg.alias(name) for name, agg in metrics.items()]
+        )
+        if columns is not None:
+            out = out.select(*columns)
+        out = out.localCheckpoint(eager=True)
+    finally:
+        sc.setJobDescription(prev)
+    return out, obs.get
 
 
 @dataclass

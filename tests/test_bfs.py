@@ -4,7 +4,7 @@ import pandas as pd
 import pytest
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.operators.bfs import bfs_hops
+from crgp_spark.operators.bfs import BFSBudgetExhausted, bfs_hops
 from crgp_spark.operators.cascade_algos import cascade_bfs
 from tests.oracles import random_edges
 
@@ -63,6 +63,21 @@ def test_chain_and_unreachable(spark, tmp_path):
         for r in bfs_hops(spark, edges, sources, _cfg(tmp_path)).collect()
     }
     assert got == {v: v - 10 for v in range(10, 51)}
+
+
+def test_chain_longer_than_cap_raises(spark, tmp_path):
+    """A 6-hop chain under a 3-superstep cap: the frontier is still
+    non-empty at the cap, so BFS raises instead of returning the first
+    three levels as if they were everything."""
+    pdf = pd.DataFrame({"src": list(range(0, 6)), "dst": list(range(1, 7))})
+    edges = spark.createDataFrame(pdf)
+    sources = spark.createDataFrame(pd.DataFrame({"vid": [0]}))
+    with pytest.raises(BFSBudgetExhausted):
+        bfs_hops(spark, edges, sources, _cfg(tmp_path), max_iterations=3)
+    # eccentricity 6 needs 7 supersteps: the last one finds the
+    # frontier empty
+    got = bfs_hops(spark, edges, sources, _cfg(tmp_path), max_iterations=7)
+    assert {r.vid: r.dist for r in got.collect()} == {v: v for v in range(7)}
 
 
 def test_cascade_bfs_matches_generic(spark, tmp_path):
