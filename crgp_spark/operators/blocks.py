@@ -1,9 +1,11 @@
 """Biconnected components (blocks) and articulation points — the
-vertex-connectivity siblings of `bridges.py` (same BFS-forest +
-Euler-interval substrate).
+vertex-connectivity siblings of `bridges.py`, on the same
+Euler-interval substrate and its two constructions (unrolled over the
+BFS forest when BFS drains within ``UNROLL_MAX_DEPTH + 1`` supersteps,
+else Borůvka forest + list-ranked unrooted Euler tour).
 
 Tarjan–Vishkin 1985 auxiliary-graph reduction, in interval units
-(`euler.interval_substrate` supplies ``tin/tout/size/low/high``):
+(`euler.connectivity_substrate` supplies ``tin/tout/size/low/high``):
 
 1. tree edges are identified by their CHILD vertex (a bijection —
    no synthetic edge ids, no pairing-function overflow);

@@ -21,10 +21,13 @@ bit-reproducible and oracle-checkable):
    hop closer.  Deterministic, and BFS depth = source eccentricity —
    shallow for the small-world graphs this engine targets.
 2. **Euler-tour interval labels + low/high** via
-   `euler.interval_substrate` — O(V) label rows (replacing the former
-   O(V · depth) ancestor closure, which was a genuine 100×-scale soft
-   spot on deep graphs; deep forests now take O(log n) list-ranking
-   supersteps instead of O(depth)).
+   `euler.connectivity_substrate` — O(V) label rows (replacing the
+   former O(V · depth) ancestor closure, which was a genuine
+   100×-scale soft spot on deep graphs).  Two constructions: the BFS
+   forest of step 1 with the passes unrolled per level when BFS drains
+   within ``UNROLL_MAX_DEPTH + 1`` supersteps, else a Borůvka forest
+   rooted by list ranking an unrooted Euler tour — O(log n) supersteps
+   instead of O(depth).
 3. **Low-link bridge test.** A tree edge above child ``c`` is a
    bridge iff NO non-tree edge crosses the subtree(c) boundary ⟺
    every single-hop non-tree reach from subtree(c) stays inside
@@ -50,10 +53,7 @@ from pyspark.sql import functions as F
 from crgp_spark.config import EngineConfig
 from crgp_spark.operators.bfs import bfs_hops
 from crgp_spark.operators.components import connected_components
-from crgp_spark.operators.euler import (
-    connectivity_substrate,
-    interval_substrate,
-)
+from crgp_spark.operators.euler import connectivity_substrate
 
 __all__ = ["bfs_forest", "bridges", "two_edge_components"]
 
@@ -133,25 +133,12 @@ def bridges(
     spark: SparkSession,
     edges: DataFrame,
     cfg: EngineConfig | None = None,
-    forest: DataFrame | None = None,
 ) -> DataFrame:
     """Every bridge of the simple undirected graph as ``(u, v)`` with
-    ``u < v``.  Pass a precomputed ``forest`` (from `bfs_forest`) to
-    share it with `two_edge_components`."""
+    ``u < v``."""
     cfg = cfg or EngineConfig()
     und = _canonical(edges).persist()
-    if forest is not None:
-        # caller-supplied rooted forest (shallow regime by contract)
-        tree = forest.filter(F.col("parent").isNotNull()).select(
-            F.least("vid", "parent").alias("u"),
-            F.greatest("vid", "parent").alias("v"),
-        )
-        nontree = und.join(tree, ["u", "v"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        sub = interval_substrate(spark, forest, nontree, cfg)
-    else:
-        sub = connectivity_substrate(spark, und, cfg)
+    sub = connectivity_substrate(spark, und, cfg)
     # tree edge above c is a bridge ⟺ no non-tree edge escapes
     # subtree(c): every single-hop reach stays inside [tin, tout]
     out = (

@@ -1,5 +1,5 @@
-"""Euler-tour / DFS-interval labeling of rooted spanning forests —
-the scale-safe substrate of the connectivity family (`bridges.py`,
+"""Euler-tour / DFS-interval labeling of spanning forests — the
+scale-safe substrate of the connectivity family (`bridges.py`,
 `blocks.py`).
 
 Replaces the ancestor closure that previously backed bridges/blocks:
@@ -8,8 +8,7 @@ shallow small-world graphs this engine targets (measured depth 2 at
 sf0.1), but O(V²) on a deep chain, a genuine 100×-scale failure on one
 input class.  Interval labels answer the same questions in O(V) rows:
 
-- ``tin(v)``  = preorder index of ``v`` inside its tree (root = 0)
-  under the child-sorted (ascending vid) DFS,
+- ``tin(v)``  = preorder index of ``v`` inside its tree (root = 0),
 - ``tout(v)`` = ``tin(v) + size(v) - 1`` = the largest preorder index
   in ``v``'s subtree,
 - subtree test: ``x ∈ subtree(v) ⟺ tin(v) ≤ tin(x) ≤ tout(v)``,
@@ -20,27 +19,34 @@ input class.  Interval labels answer the same questions in O(V) rows:
   reconstructed cascade graph of reconstruct.rs:37-134 is what users
   run these resilience questions against downstream).
 
-Two constructions, chosen by the measured forest depth, both yielding
-the IDENTICAL labels (same child-sorted DFS order):
+Two constructions; `connectivity_substrate` probes the BFS forest for
+at most ``UNROLL_MAX_DEPTH + 1`` supersteps and picks by whether it
+drained:
 
-* depth ≤ ``UNROLL_MAX_DEPTH``: the sizes / tin / low / high passes
-  are unrolled level-by-level into ONE lazy Catalyst plan (~4·depth
-  joins, each level a frame) — a single job, no per-level supersteps,
-  exactly right for the shallow conversation graphs that dominate the
-  workload.
-* deeper: the classic O(log n)-superstep path — Euler circuit arcs
-  linked by locally-computed next pointers, positions by
-  pointer-doubling list ranking (Tarjan-Vishkin / JáJá §3), subtree
-  min/max by a doubling sparse table over the preorder array.  A
-  10⁶-vertex chain takes ~21 doublings, not 10⁶ supersteps.
+* shallow (BFS depth ≤ ``UNROLL_MAX_DEPTH``): the BFS forest the
+  DuckDB oracles replay, with the sizes / tin / low / high passes
+  unrolled level-by-level into lazy Catalyst plans (~4·depth joins,
+  one checkpoint per pass) under the child-sorted (ascending vid) DFS
+  — exactly right for the shallow conversation graphs that dominate
+  the workload.
+* deep (the probe did not drain): a Borůvka spanning forest
+  (O(log V) supersteps, `msf.py`) rooted by an UNROOTED Euler tour —
+  circuit arcs linked by locally-computed next pointers, positions by
+  pointer-doubling list ranking (Tarjan-Vishkin / JáJá §3), dense
+  preorder by a global prefix count (`plans/prefix.py`), subtree
+  min/max by a doubling sparse table over the preorder array.  No step
+  is O(depth): a 10⁶-vertex chain takes ~21 doublings.
+
+The consumers are spanning-tree independent, so both constructions
+give every consumer the same answer (their ``tin`` orders differ).
 
 Scale notes: every join keys on a vertex id or an integer array
 position; list-ranking state is 2(V-1) arc rows; the sparse table is
 O(V log V) rows built in O(log V) self-joins (each superstep
 ``localCheckpoint`` + ``reset_stats`` — state ⋈ state doubling is the
 exact Catalyst-estimate-squaring case CLAUDE.md documents).  The only
-per-key serial region is the sibling-ordering window
-(``partitionBy(parent)``), bounded by the maximum degree — the same
+per-key serial regions are the sibling-ordering and adjacency windows
+(partitioned by vertex), bounded by the maximum degree — the same
 bound the previous closure construction had.
 """
 
@@ -51,6 +57,7 @@ from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
 from crgp_spark.operators.bfs import BFSBudgetExhausted
+from crgp_spark.plans.prefix import range_cumsum
 from crgp_spark.plans.superstep import (
     _release_stale_checkpoints,
     observed_checkpoint,
@@ -58,68 +65,18 @@ from crgp_spark.plans.superstep import (
     state_hint,
 )
 
-__all__ = [
-    "connectivity_substrate",
-    "interval_substrate",
-    "UNROLL_MAX_DEPTH",
-    "BFS_FOREST_BUDGET",
-]
+__all__ = ["connectivity_substrate", "UNROLL_MAX_DEPTH"]
 
-#: Superstep budget for the shallow-regime BFS forest.  BFS is
-#: O(diameter) supersteps — the right construction for the small-world
-#: target graphs (measured depth 2 at sf0.1) and the one the DuckDB
-#: oracles replay, but a scale trap on deep graphs.  If the BFS
-#: frontier has not drained within this budget (`bfs.BFSBudgetExhausted`),
-#: `connectivity_substrate` falls back to the O(log n)-superstep deep
-#: path (Borůvka forest + unrooted Euler rooting).
-BFS_FOREST_BUDGET = 48
-
-#: Below this forest depth the whole substrate compiles to one lazy
-#: plan (~4·depth joins); above it the O(log n)-superstep list-ranked
-#: path takes over.  Measured: target conversation graphs sit at
-#: depth ≤ 8, where the unrolled plan is one job vs ~2·log₂(V)
-#: checkpointed supersteps.
+#: Up to this BFS forest depth the substrate is the unrolled plan
+#: (~4·depth joins, three jobs); the BFS probe runs one superstep more
+#: (depth d drains in d + 1) and a probe that does not drain hands the
+#: graph to the O(log V)-superstep Borůvka path.  Measured: target
+#: conversation graphs sit at depth ≤ 8.
 UNROLL_MAX_DEPTH = 12
 
 #: Pointer-doubling cap: 2^64 arcs is beyond any input; hitting the
 #: cap means a next-pointer cycle (corrupt forest) — raise loudly.
 _MAX_DOUBLINGS = 64
-
-
-def interval_substrate(
-    spark: SparkSession,
-    forest: DataFrame,
-    nontree: DataFrame,
-    cfg: EngineConfig | None = None,
-) -> DataFrame:
-    """DFS-interval labels + low/high values for a BFS spanning forest.
-
-    ``forest``: ``(vid, comp, dist, parent)`` — `bridges.bfs_forest`
-    output (parent NULL exactly at roots).  ``nontree``: the non-tree
-    edges of the SIMPLE graph as canonical ``(u, v)``, ``u < v``.
-
-    Returns ``(vid, comp, dist, parent, tin, tout, size, low, high)``:
-    one row per forest vertex; ``low``/``high`` are the min/max
-    ``tin`` seen by any single non-tree edge leaving ``v``'s subtree
-    (including ``tin(v)`` itself, so they are always defined).
-    """
-    cfg = cfg or EngineConfig()
-    maxd = forest.agg(F.max("dist")).collect()[0][0]
-    if maxd is None:
-        # empty forest: empty substrate with the right schema
-        return forest.select(
-            "vid", "comp", "dist", "parent",
-            F.lit(0).cast("long").alias("tin"),
-            F.lit(0).cast("long").alias("tout"),
-            F.lit(0).cast("long").alias("size"),
-            F.lit(0).cast("long").alias("low"),
-            F.lit(0).cast("long").alias("high"),
-        )
-    if maxd <= UNROLL_MAX_DEPTH:
-        out = _substrate_unrolled(forest, nontree, int(maxd))
-    else:
-        out = _substrate_listrank(spark, forest, nontree, cfg)
-    return out.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -277,41 +234,11 @@ def _nontree_reach(iv: DataFrame, nontree: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# deep path: list-ranked Euler circuit + sparse-table subtree min/max
+# deep path: Borůvka forest, list-ranked unrooted Euler circuit,
+# sparse-table subtree min/max
 
 
-def _cum_over(
-    df: DataFrame, order_cols: list[str], val_col: str, partitions: int
-) -> DataFrame:
-    """Inclusive cumulative sum of ``val_col`` over the GLOBAL
-    ``order_cols`` ordering — two-level range-partitioned prefix sums
-    (the `rankcorr._doubled_midranks` idiom): per-partition window +
-    a #partitions-row offset table.  Adds ``_cum``."""
-    ranged = df.repartitionByRange(partitions, *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    wloc = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn("_lc", F.sum(val_col).over(wloc))
-    woff = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        ranged.groupBy("_pid")
-        .agg(F.sum(val_col).alias("_t"))
-        .select(
-            "_pid", F.coalesce(F.sum("_t").over(woff), F.lit(0)).alias("_off")
-        )
-    )
-    return local.join(F.broadcast(offsets), "_pid").withColumn(
-        "_cum", (F.col("_lc") + F.col("_off")).cast("long")
-    ).drop("_pid", "_lc", "_off")
-
-
-def _rank_arcs(
-    spark: SparkSession, state: DataFrame, n_arcs: int
-) -> DataFrame:
+def _rank_arcs(state: DataFrame, n_arcs: int) -> DataFrame:
     """Pointer-doubled list ranking of Euler-circuit arcs.
 
     ``state``: ``(comp, t, h, nt, nh, dist)`` — one row per arc
@@ -337,11 +264,15 @@ def _rank_arcs(
             F.col("_nh2").alias("nh"),
             (F.col("dist") + F.col("_d2")).alias("dist"),
         )
-        state = reset_stats(
-            done.unionByName(upd).localCheckpoint(eager=True)
+        # the drain test rides on the checkpoint job
+        state, m = observed_checkpoint(
+            done.unionByName(upd),
+            f"euler rank it={_it}",
+            active=F.count(F.col("nt")),
         )
+        state = reset_stats(state)
         _release_stale_checkpoints(spark, _it)
-        if state.filter(F.col("nt").isNotNull()).isEmpty():
+        if not m["active"]:
             break
     else:
         raise RuntimeError(
@@ -356,18 +287,15 @@ def _rank_arcs(
 
 
 def _intervals_from_arcs(
-    spark: SparkSession,
-    ranked: DataFrame,
-    roots: DataFrame,
-    cfg: EngineConfig,
+    ranked: DataFrame, roots: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
     """(vid, comp, parent, tin, tout, size) from ranked circuit arcs.
 
-    Works for ANY Euler circuit of the forest (rooted parent-first or
-    plain sorted cyclic order): the first entry into a non-root vertex
-    is the min-position arc entering it and comes from its DFS parent;
-    the final departure is the matching reverse arc.  ``roots``:
-    ``(vid, comp)`` — one row per tree root."""
+    Works for any Euler circuit of the forest cut at its root: the
+    first entry into a non-root vertex is the min-position arc entering
+    it and comes from its DFS parent; the final departure is the
+    matching reverse arc.  ``roots``: ``(vid, comp)`` — one row per
+    tree root."""
     ranked = ranked.localCheckpoint(eager=True)
     rootset = roots.select(F.col("vid").alias("h"))
     entries = (
@@ -391,16 +319,16 @@ def _intervals_from_arcs(
         )
     )
     # dense preorder: tin(c) = # first-entry arcs in comp at pos ≤ pos(entry(c))
-    cum = _cum_over(
-        nonroot.withColumn("_one", F.lit(1)),
+    cum = range_cumsum(
+        nonroot.withColumn("entry", F.lit(1)),
         ["comp", "_pd"],
-        "_one",
+        ["entry"],
         cfg.shuffle_partitions,
     )
-    base = cum.groupBy("comp").agg((F.min("_cum") - 1).alias("_base"))
+    base = cum.groupBy("comp").agg((F.min("_cum_entry") - 1).alias("_base"))
     nonroot = cum.join(base, "comp").select(
         "vid", "comp", "parent", "size",
-        (F.col("_cum") - F.col("_base")).cast("long").alias("tin"),
+        (F.col("_cum_entry") - F.col("_base")).cast("long").alias("tin"),
     )
     lmax = ranked.groupBy("comp").agg(F.max("pos").alias("_lmax"))
     root_rows = (
@@ -421,107 +349,23 @@ def _intervals_from_arcs(
     )
 
 
-def _substrate_listrank(
-    spark: SparkSession,
-    forest: DataFrame,
-    nontree: DataFrame,
-    cfg: EngineConfig,
-) -> DataFrame:
-    """O(log n)-superstep construction for a deep ROOTED forest: Euler
-    circuit arcs with parent-first cyclic next pointers (preserving the
-    ascending-vid child order of the unrolled path), pointer-doubled
-    list ranking, prefix counts for dense preorder, sparse-table
-    doubling for subtree min/max."""
-    forest, m = observed_checkpoint(
-        forest,
-        "euler listrank forest it=0",
-        n_children=F.count_if(F.col("parent").isNotNull()),
-    )
-    children = forest.filter(F.col("parent").isNotNull()).select(
-        "vid", "parent", "comp"
-    )
-    n_children = m["n_children"]
-    if n_children == 0:
-        # forest of isolated roots: every vertex its own interval
-        return forest.select(
-            "vid", "comp", "dist", "parent",
-            F.lit(0).cast("long").alias("tin"),
-            F.lit(0).cast("long").alias("tout"),
-            F.lit(1).cast("long").alias("size"),
-            F.lit(0).cast("long").alias("low"),
-            F.lit(0).cast("long").alias("high"),
-        )
-
-    # local circuit structure: successor sibling, first child, grandparent
-    w_sib = Window.partitionBy("parent").orderBy("vid")
-    ch = children.withColumn("_nsib", F.lead("vid").over(w_sib))
-    fc = children.groupBy("parent").agg(F.min("vid").alias("_fc"))
-    gp = forest.select(
-        F.col("vid").alias("parent"), F.col("parent").alias("_gp")
-    )
-    ch = (
-        ch.join(fc.withColumnRenamed("parent", "vid"), "vid", "left")
-        .join(gp, "parent", "left")
-        .localCheckpoint(eager=True)
-    )
-
-    # arcs keyed (t, h): down(c) = (parent, c); up(c) = (c, parent).
-    # next(down(c)) = down(first child of c) else up(c);
-    # next(up(c))   = down(next sibling) else up(parent) else NIL (root cut).
-    down = ch.select(
-        "comp",
-        F.col("parent").alias("t"),
-        F.col("vid").alias("h"),
-        F.col("vid").alias("nt"),
-        F.coalesce(F.col("_fc"), F.col("parent")).alias("nh"),
-    )
-    up = ch.select(
-        "comp",
-        F.col("vid").alias("t"),
-        F.col("parent").alias("h"),
-        F.when(F.col("_nsib").isNotNull(), F.col("parent"))
-        .when(F.col("_gp").isNotNull(), F.col("parent"))
-        .otherwise(F.lit(None))
-        .alias("nt"),
-        F.when(F.col("_nsib").isNotNull(), F.col("_nsib"))
-        .when(F.col("_gp").isNotNull(), F.col("_gp"))
-        .otherwise(F.lit(None))
-        .alias("nh"),
-    )
-    state = down.unionByName(up).withColumn(
-        "dist",
-        F.when(F.col("nt").isNotNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long"),
-    )
-    ranked = _rank_arcs(spark, state, 2 * n_children)
-    roots = forest.filter(F.col("parent").isNull()).select("vid", "comp")
-    iv = (
-        _intervals_from_arcs(spark, ranked, roots, cfg)
-        .join(forest.select("vid", "dist"), "vid")
-    )
-    return _subtree_minmax_sparse(spark, iv, nontree, cfg)
-
-
 def _subtree_minmax_sparse(
-    spark: SparkSession,
-    iv: DataFrame,
-    nontree: DataFrame,
-    cfg: EngineConfig,
+    iv: DataFrame, nontree: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
     """Attach ``low``/``high`` (subtree min/max of the single-hop
     non-tree reach) to interval rows ``iv`` via a doubling sparse table
     over the global dense preorder array (per-comp offsets make the
     positions globally dense; query ranges never cross a comp)."""
-    iv = iv.localCheckpoint(eager=True)
+    iv, m = observed_checkpoint(
+        iv, "euler deep intervals it=0", max_size=F.max("size")
+    )
     vals = _nontree_reach(iv, nontree)
     sizes_c = iv.filter(F.col("parent").isNull()).select(
-        "comp", F.col("size").alias("_csz")
+        "comp", F.col("size").alias("csz")
     )
-    offs = (
-        _cum_over(sizes_c, ["comp"], "_csz", cfg.shuffle_partitions)
-        .select("comp", (F.col("_cum") - F.col("_csz")).alias("_coff"))
-    )
+    offs = range_cumsum(
+        sizes_c, ["comp"], ["csz"], cfg.shuffle_partitions
+    ).select("comp", (F.col("_cum_csz") - F.col("csz")).alias("_coff"))
     arr = (
         iv.join(vals.select("vid", "nlow", "nhigh"), "vid")
         .join(offs, "comp")
@@ -532,7 +376,7 @@ def _subtree_minmax_sparse(
         )
         .localCheckpoint(eager=True)
     )
-    max_size = iv.agg(F.max("size")).collect()[0][0] or 1
+    max_size = m["max_size"] or 1
     n_levels = max(0, int(max_size - 1).bit_length())
     levels = [arr.withColumn("k", F.lit(0))]
     cur = arr
@@ -607,51 +451,54 @@ def _subtree_minmax_sparse(
 
 
 # ---------------------------------------------------------------------------
-# depth-robust top level
+# top level: BFS probe, then one of the two constructions
 
 
 def connectivity_substrate(
     spark: SparkSession,
     und: DataFrame,
     cfg: EngineConfig | None = None,
-    bfs_budget: int = BFS_FOREST_BUDGET,
 ) -> DataFrame:
     """Spanning-forest interval substrate for the simple undirected
     graph ``und`` (canonical ``(u, v)``, ``u < v``), rooted at the
     component-minimum vertices.
 
-    Shallow regime (BFS reaches every vertex within ``bfs_budget``
-    supersteps — the target small-world workload): the BFS forest
-    construction the DuckDB oracles replay, with intervals unrolled or
-    list-ranked by depth.  Deep regime: a Borůvka spanning forest
-    (O(log V) supersteps, `msf.py`) rooted by an UNROOTED Euler tour —
-    next pointers from plain sorted cyclic adjacency, parent = tail of
-    each vertex's first-entry arc — so no step is O(depth).  The final
+    A BFS forest probe runs for at most ``UNROLL_MAX_DEPTH + 1``
+    supersteps.  If it drains (depth ≤ ``UNROLL_MAX_DEPTH`` — the
+    target small-world workload), the substrate is the unrolled plan
+    over that BFS forest, the construction the DuckDB oracles replay.
+    Otherwise it is a Borůvka spanning forest (O(log V) supersteps,
+    `msf.py`) rooted by an UNROOTED Euler tour — next pointers from
+    plain sorted cyclic adjacency, parent = tail of each vertex's
+    first-entry arc — so no step is O(depth).  The final
     bridges/blocks/2ECC answers are spanning-tree-independent, so both
-    regimes agree on every consumer's output (the deep regime's tin
+    constructions agree on every consumer's output (the deep tin
     ordering differs, which is invisible downstream).
 
-    Returns ``(vid, comp, dist, parent, tin, tout, size, low, high)``
-    (``dist`` NULL in the deep regime — hop depths are a BFS notion).
+    Returns ``(vid, comp, dist, parent, tin, tout, size, low, high)``:
+    one row per vertex; ``low``/``high`` are the min/max ``tin`` seen
+    by any single non-tree edge leaving ``v``'s subtree (including
+    ``tin(v)`` itself, so they are always defined).  ``dist`` is NULL
+    on the deep path — hop depths are a BFS notion.
     """
     from crgp_spark.operators.bridges import bfs_forest  # deferred: cycle
 
     cfg = cfg or EngineConfig()
     und = und.localCheckpoint(eager=True)
-    # one components run serves both regimes: the BFS roots, and the
-    # root test of the deep path's Euler rooting
+    # one components run serves both constructions: the BFS roots, and
+    # the root test of the deep path's Euler rooting
     comp = _components(spark, und, cfg)
     try:
         forest = bfs_forest(
             spark,
             und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             cfg,
-            max_iterations=bfs_budget,
+            max_iterations=UNROLL_MAX_DEPTH + 1,
             comp=comp,
         )
     except BFSBudgetExhausted:
         # the roots are every component's minimum vertex, so a BFS that
-        # drains within the budget reaches every vertex: the drain
+        # drains within the probe reaches every vertex: the drain
         # signal IS the coverage check
         return _deep_substrate(spark, und, cfg, comp)
     tree = forest.filter(F.col("parent").isNotNull()).select(
@@ -661,7 +508,11 @@ def connectivity_substrate(
     nontree = und.join(tree, ["u", "v"], "left_anti").localCheckpoint(
         eager=True
     )
-    return interval_substrate(spark, forest, nontree, cfg)
+    # NULL only for an empty graph, whose substrate is empty at depth 0
+    maxd = forest.agg(F.max("dist")).collect()[0][0] or 0
+    return _substrate_unrolled(forest, nontree, maxd).localCheckpoint(
+        eager=True
+    )
 
 
 def _components(
@@ -742,11 +593,11 @@ def _deep_substrate(
         .otherwise(F.lit(0))
         .cast("long"),
     )
-    ranked = _rank_arcs(spark, state, 2 * n_tree)
+    ranked = _rank_arcs(state, 2 * n_tree)
     roots = comp.filter(F.col("vid") == F.col("comp")).select("vid", "comp")
-    iv = _intervals_from_arcs(spark, ranked, roots, cfg).withColumn(
+    iv = _intervals_from_arcs(ranked, roots, cfg).withColumn(
         "dist", F.lit(None).cast("int")
     )
-    return _subtree_minmax_sparse(spark, iv, nontree, cfg).localCheckpoint(
+    return _subtree_minmax_sparse(iv, nontree, cfg).localCheckpoint(
         eager=True
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crgp_spark.functions import decimal_round
+from crgp_spark.plans.prefix import range_cumsum
 
 _DAY_US = 86_400_000_000
 
@@ -98,8 +99,8 @@ def ks_test(
     100 TB design: the ECDF prefix sum is NOT a single-task window —
     distinct metric values are range-partitioned, each partition scans
     its local cumulative, and a ``partitions``-row offset table (one
-    row per range) is broadcast back (the ``skyline.py`` two-level
-    pattern). No shuffle exceeds the distinct-value count; the only
+    row per range) is broadcast back (``plans/prefix.range_cumsum``).
+    No shuffle exceeds the distinct-value count; the only
     single-row stage is the final max.
 
     The reference has no hypothesis-testing surface (terminal counters
@@ -134,39 +135,8 @@ def ks_from_user_totals(
     tot = cnt.agg(
         F.sum("c0").alias("n0"), F.sum("c1").alias("n1")
     )
-    ranged = cnt.repartitionByRange(partitions, "y").withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    wloc = (
-        Window.partitionBy("_pid")
-        .orderBy("y")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.select(
-        "_pid",
-        "y",
-        F.sum("c0").over(wloc).alias("lc0"),
-        F.sum("c1").over(wloc).alias("lc1"),
-    )
-    # offsets: per-range totals, exclusive prefix over the ≤`partitions`
-    # range ids — metadata-sized, broadcast back
-    woff = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        ranged.groupBy("_pid")
-        .agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
-        .select(
-            "_pid",
-            F.coalesce(F.sum("t0").over(woff), F.lit(0)).alias("off0"),
-            F.coalesce(F.sum("t1").over(woff), F.lit(0)).alias("off1"),
-        )
-    )
-    cum = local.join(F.broadcast(offsets), "_pid").select(
-        "y",
-        (F.col("off0") + F.col("lc0")).alias("cum0"),
-        (F.col("off1") + F.col("lc1")).alias("cum1"),
+    cum = range_cumsum(cnt, ["y"], ["c0", "c1"], partitions).select(
+        "y", F.col("_cum_c0").alias("cum0"), F.col("_cum_c1").alias("cum1")
     )
     gap = cum.join(F.broadcast(tot)).select(
         "n0",

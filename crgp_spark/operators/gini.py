@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crgp_spark.functions import decimal_round
+from crgp_spark.plans.prefix import range_cumsum
 
 __all__ = ["gini_coefficient", "benford_audit"]
 
@@ -50,10 +51,10 @@ def gini_coefficient(
     6dp. Requires non-negative amounts (negative spend makes the
     Lorenz construction meaningless; validate upstream).
 
-    Rank sums come from per-(group, value) counts and a two-level
-    range-partitioned cumulative count (the `rankcorr` prefix-sum
-    idiom) — no per-group single-task window, so a group of any size
-    distributes (ADVICE r4).  A value run of count ``c`` starting at
+    Rank sums come from per-(group, value) counts and one global
+    cumulative count over ``(group, value)`` (`plans/prefix`), rebased
+    per group — no per-group single-task window, so a group of any
+    size distributes (ADVICE r4).  A value run of count ``c`` starting at
     rank ``s`` contributes ``x·(c·s + c(c−1)/2)``, which is
     tie-order-invariant — identical to the row_number formulation."""
     cnt = (
@@ -64,29 +65,14 @@ def gini_coefficient(
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     parts = max(amounts.sparkSession.sparkContext.defaultParallelism, 4)
-    ranged = cnt.repartitionByRange(parts, group_col, "_x").withColumn(
-        "_pid", F.spark_partition_id()
+    cum = range_cumsum(cnt, [group_col, "_x"], ["_c"], parts)
+    # the cumulative count runs across groups: subtract each group's base
+    base = cum.groupBy(group_col).agg(
+        F.min(F.col("_cum__c") - F.col("_c")).alias("_base")
     )
-    wloc = (
-        Window.partitionBy("_pid", group_col)
-        .orderBy("_x")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn("_lc", F.sum("_c").over(wloc))
-    woff = (
-        Window.partitionBy(group_col)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        ranged.groupBy("_pid", group_col)
-        .agg(F.sum("_c").alias("_t"))
-        .withColumn("_off", F.coalesce(F.sum("_t").over(woff), F.lit(0)))
-        .select("_pid", group_col, "_off")
-    )
-    j = local.join(offsets, ["_pid", group_col])
+    j = cum.join(base, group_col)
     # cum_le inclusive; run of _c equal values starts at rank s
-    s = F.col("_lc") + F.col("_off") - F.col("_c") + 1
+    s = F.col("_cum__c") - F.col("_base") - F.col("_c") + 1
     run_rank_sum = F.col("_c") * s + F.shiftright(
         F.col("_c") * (F.col("_c") - 1), 1
     )

@@ -6,7 +6,7 @@ BY (a, b)`` rewrites files so ranges of BOTH columns map to contiguous
 key ranges, letting min/max file statistics prune two-dimensional
 predicates.  The kernel of that operation is computing the interleaved
 Morton key; this operator emits it (plus a file/bucket assignment) so
-callers can ``repartitionByRange(zkey)`` before writing.
+callers can range-partition on ``zkey`` before writing.
 
 Bit interleaving uses the classic magic-mask spread (each step doubles
 the gap between significant bits) — five shift-and-mask steps per
@@ -60,7 +60,7 @@ def zorder_layout(
 ) -> DataFrame:
     """(id_col, zkey, bucket): the Morton key of ``(col_a, col_b)``
     and its top-``bucket_bits`` bucket — the file assignment a ZORDER
-    rewrite would use (``repartitionByRange`` on ``zkey`` gives the
+    rewrite would use (range partitioning on ``zkey`` gives the
     same contiguity without materializing buckets)."""
     if not 1 <= bucket_bits <= 62:
         raise ValueError(

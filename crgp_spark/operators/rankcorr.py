@@ -17,23 +17,25 @@ one map-side-combinable aggregate; the only float math is the final
 
 in pinned expression order (the ``graphstats.py::mixing_stats``
 contract). Overflow envelope: r2 ≤ 2n+1 so the product moments are
-~4n³ — int64-safe to n ≈ 1.3·10⁶ rows; both engines fail loudly
-beyond (switch the moments to DECIMAL(38,0) for larger inputs, same
-caveat as ``mixing_stats``).
+~4n³, and ``num``/``denx``/``deny`` multiply them by n (~4n⁴) —
+int64-safe only to n ≈ 3.9·10⁴ rows (``n·Sxy`` overflows at 60k
+pairs); both engines fail loudly beyond (switch the moments to
+DECIMAL(38,0) for larger inputs, same caveat as ``mixing_stats``).
 
 The rank pass itself is value-level: one groupBy per column plus one
 cumulative count over DISTINCT values via the range-partitioned
-two-level prefix sum (the ``skyline.py`` / ``ks_test`` pattern) — no
+two-level prefix sum (``plans/prefix.range_cumsum``) — no
 single-task window touches data-sized input. The reference has no
 correlation surface (terminal counters only, ``statistics.rs:17-131``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crgp_spark.functions import decimal_round
+from crgp_spark.plans.prefix import range_cumsum
 
 __all__ = ["spearman_rho"]
 
@@ -42,39 +44,12 @@ def _doubled_midranks(
     df: DataFrame, col: str, out: str, partitions: int
 ) -> DataFrame:
     """(col, r2) per DISTINCT value of ``col``: doubled midrank via a
-    range-partitioned cumulative count (pid ordering follows the range
-    partitioner's value ordering)."""
+    global cumulative count over the distinct values."""
     cnt = df.groupBy(col).agg(F.count(F.lit(1)).alias("_c"))
-    ranged = cnt.repartitionByRange(partitions, col).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    wloc = (
-        Window.partitionBy("_pid")
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.select(
-        "_pid", col, "_c", F.sum("_c").over(wloc).alias("_lc")
-    )
-    woff = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        ranged.groupBy("_pid")
-        .agg(F.sum("_c").alias("_t"))
-        .select(
-            "_pid",
-            F.coalesce(F.sum("_t").over(woff), F.lit(0)).alias("_off"),
-        )
-    )
     # cum_le = cumulative count ≤ value; lt = cum_le - c
-    return local.join(F.broadcast(offsets), "_pid").select(
+    return range_cumsum(cnt, [col], ["_c"], partitions).select(
         col,
-        (
-            F.lit(2) * (F.col("_off") + F.col("_lc") - F.col("_c"))
-            + F.col("_c")
-            + F.lit(1)
-        )
+        (F.lit(2) * (F.col("_cum__c") - F.col("_c")) + F.col("_c") + F.lit(1))
         .cast("long")
         .alias(out),
     )

@@ -10,11 +10,11 @@ at 100 TB).  The distributed plan here is linear:
    groupBy (map-side partial agg), since only the lowest y at each x
    can survive;
 2. strict-prefix min of y in x order WITHOUT a global single-partition
-   window: range-repartition by x, take each partition's local running
-   min (window partitioned by ``spark_partition_id()``), and fold in
-   the preceding partitions' minima via a metadata-sized (one row per
-   partition) broadcast — the same two-level prefix idiom as
-   `seqpack.py`'s shard prefix sums;
+   window: range-split by x (`plans/prefix.range_split`, materialized
+   once — the split feeds both branches below), take each range's
+   local running min, and fold in the preceding ranges' minima via a
+   metadata-sized (one row per range) broadcast — the two-level prefix
+   idiom of `plans/prefix.range_cumsum`, with min in place of sum;
 3. keep a candidate iff no preceding x has y <= its y (ties on y at a
    larger x are dominated), then join multiplicities back on.
 
@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crgp_spark.plans.prefix import range_split
+
 
 def skyline2d(df: DataFrame, x: str, y: str, partitions: int = 32) -> DataFrame:
     """Pareto frontier of ``df`` minimizing ``(x, y)`` — returns
@@ -37,9 +39,7 @@ def skyline2d(df: DataFrame, x: str, y: str, partitions: int = 32) -> DataFrame:
     cnt = df.groupBy(x, y).agg(F.count(F.lit(1)).alias("n"))
     cand = cnt.groupBy(x).agg(F.min(y).alias(y))
 
-    ranged = cand.repartitionByRange(partitions, x).withColumn(
-        "_pid", F.spark_partition_id()
-    )
+    ranged = range_split(cand, [x], partitions)
     # local strict-prefix min (distinct x per row, so "preceding row"
     # == "strictly smaller x" within the partition)
     w_local = (

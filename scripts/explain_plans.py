@@ -721,20 +721,10 @@ def main() -> None:
             ),
     })
 
-    from crgp_spark.operators.bridges import (
-        _canonical as _bridge_canon,
-        bfs_forest,
-    )
-    from crgp_spark.operators.euler import interval_substrate
+    from crgp_spark.operators.bridges import _canonical as _bridge_canon
+    from crgp_spark.operators.euler import connectivity_substrate
 
-    _bf = bfs_forest(spark, e_vid, cfg)
-    _bund = _bridge_canon(e_vid)
-    _btree = _bf.filter(F.col("parent").isNotNull()).select(
-        F.least("vid", "parent").alias("u"),
-        F.greatest("vid", "parent").alias("v"),
-    )
-    _bnt = _bund.join(_btree, ["u", "v"], "left_anti")
-    _bsub = interval_substrate(spark, _bf, _bnt, cfg)
+    _bsub = connectivity_substrate(spark, _bridge_canon(e_vid), cfg)
     sections.update({
         "Bridges low-link test over the Euler interval substrate: O(V) "
         "label rows (replacing the O(V*depth) ancestor closure), one "
@@ -823,8 +813,9 @@ def main() -> None:
     from crgp_spark.operators.skyline import skyline2d
 
     sections.update({
-        "2-D skyline: combinable per-x min reduction -> range exchange "
-        "-> partition-local prefix-min window + broadcast of the "
+        "2-D skyline: combinable per-x min reduction -> range split "
+        "materialized once -> partition-local prefix-min window + "
+        "broadcast of the "
         "one-row-per-partition boundary minima (no global "
         "single-partition window)": skyline2d(
             tbl["orders"].select(

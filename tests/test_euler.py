@@ -1,10 +1,13 @@
 """Euler-tour interval substrate (operators/euler.py): the
 scale-safe replacement for the former O(V·depth) ancestor closure.
 
-Covers all three constructions (unrolled shallow plan, rooted list
-ranking, deep Borůvka + unrooted rooting) against a sequential Python
-DFS replica, and the deep-graph regression the closure could not pass:
-a 1,000-deep chain, where BFS-forest construction alone would need
+Covers both constructions (unrolled plan over the BFS forest, deep
+Borůvka + unrooted Euler rooting) against a sequential Python DFS
+replica — the deep one also on ~8k shuffled vertices in over a
+thousand components, past the range sampler's full-coverage point —
+plus bridges/articulation on a mid-depth graph that takes the Borůvka
+route, and the deep-graph regression the closure could not pass: a
+1,000-deep chain, where BFS-forest construction alone would need
 1,000 supersteps (the former path capped out and produced a partial
 forest — wrong answers — long before its O(V·depth) row blowup even
 mattered)."""
@@ -20,8 +23,11 @@ from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
 from crgp_spark.operators import euler
-from crgp_spark.operators.blocks import blocks
+from crgp_spark.operators import bridges as bridges_mod
+from crgp_spark.operators.blocks import articulation_points, blocks
 from crgp_spark.operators.bridges import _canonical, bfs_forest, bridges
+from tests.test_blocks import _brute as _brute_blocks
+from tests.test_bridges import _brute_bridges
 
 
 def _cfg(tmp_path):
@@ -125,24 +131,37 @@ def test_unrolled_matches_python_dfs(spark, tmp_path):
     )
     maxd = int(forest.agg(F.max("dist")).collect()[0][0])
     assert maxd <= euler.UNROLL_MAX_DEPTH  # exercises the unrolled path
-    sub = euler.interval_substrate(spark, forest, nontree, cfg)
+    sub = euler.connectivity_substrate(spark, und, cfg).collect()
+    forest_rows = forest.collect()
+    assert {(r["vid"], r["dist"], r["parent"]) for r in sub} == {
+        (r["vid"], r["dist"], r["parent"]) for r in forest_rows
+    }
     _check_substrate(
-        sub.collect(), forest.collect(),
+        sub, forest_rows,
         [tuple(r) for r in nontree.select("u", "v").collect()],
     )
 
 
-def test_listrank_matches_python_dfs(spark, tmp_path):
-    """Rooted list ranking (forced) equals the same child-sorted DFS —
-    the two constructions are label-identical by design."""
+def test_mid_depth_bridges_and_articulation(spark, tmp_path, monkeypatch):
+    """BFS depth 26 — past the unrolled probe, far short of the chain
+    tests: the Borůvka route (``dist`` NULL in the substrate) must give
+    the brute-force bridges and articulation points."""
     cfg = _cfg(tmp_path)
-    pairs = [(i, i + 1) for i in range(1, 30)] + [(5, 25), (10, 20)]
-    und, forest, nontree = _forest_and_nontree(spark, pairs, cfg)
-    sub = euler._substrate_listrank(spark, forest, nontree, cfg)
-    _check_substrate(
-        sub.collect(), forest.collect(),
-        [tuple(r) for r in nontree.select("u", "v").collect()],
-    )
+    pairs = [(i, i + 1) for i in range(1, 60)] + [(5, 25), (35, 50)]
+    subs = []
+
+    def recording(*args, **kwargs):
+        sub = euler.connectivity_substrate(*args, **kwargs)
+        subs.append(sub)
+        return sub
+
+    monkeypatch.setattr(bridges_mod, "connectivity_substrate", recording)
+    df = spark.createDataFrame(pairs, "src: long, dst: long")
+    got = sorted(map(tuple, bridges(spark, df, cfg).collect()))
+    assert got == _brute_bridges(pairs)
+    assert subs[0].filter(F.col("dist").isNotNull()).isEmpty()
+    arts = {r["vid"] for r in articulation_points(spark, df, cfg).collect()}
+    assert sorted(arts) == sorted(_brute_blocks(pairs)[1])
 
 
 def test_deep_chain_bridges_within_budget(spark, tmp_path):
@@ -188,15 +207,48 @@ def test_deep_chain_blocks_and_articulation(spark, tmp_path):
     assert arts == want
 
 
-def test_deep_substrate_matches_python_dfs(spark, tmp_path):
+def _many_component_pairs(seed, n_comps):
+    """``n_comps`` small random components (a random tree of 4–10
+    vertices plus two random extra edges each), vertex ids spread over
+    a shuffled range, the pair list shuffled."""
+    rng = random.Random(seed)
+    ids = list(range(1, 12 * n_comps))
+    rng.shuffle(ids)
+    pairs = []
+    for _ in range(n_comps):
+        vs = [ids.pop() for _ in range(rng.randint(4, 10))]
+        pairs += [(v, rng.choice(vs[:i])) for i, v in enumerate(vs) if i]
+        pairs += [tuple(rng.sample(vs, 2)) for _ in range(2)]
+    rng.shuffle(pairs)
+    return pairs
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        "random",
+        # 7,764 vertices in 1,100 components, in no fixed input order:
+        # past the range sampler's full-coverage point, where an
+        # unmaterialized range split gave two branches different
+        # bounds (duplicate tin, multiplied rows)
+        "many_components",
+    ],
+)
+def test_deep_substrate_matches_python_dfs(spark, tmp_path, shape):
     """The unrooted deep path produces a DIFFERENT (but valid) DFS
     order; checked against a replica running the same plain sorted
     cyclic order on the same Borůvka forest."""
     from crgp_spark.operators.msf import minimum_spanning_forest
 
     cfg = _cfg(tmp_path)
-    pairs = _random_pairs(11, 60, 80)
-    df = spark.createDataFrame(pairs, "src: long, dst: long")
+    if shape == "random":
+        df = spark.createDataFrame(
+            _random_pairs(11, 60, 80), "src: long, dst: long"
+        )
+    else:
+        df = spark.createDataFrame(
+            _many_component_pairs(5, 1_100), "src: long, dst: long"
+        ).repartition(8)
     und = _canonical(df).localCheckpoint(eager=True)
     sub = euler._deep_substrate(spark, und, cfg)
     # replica: same forest (lexicographic-minimum spanning forest),
@@ -269,8 +321,16 @@ def test_deep_substrate_matches_python_dfs(spark, tmp_path):
     roots = [v for v in verts if tin[v] == 0]
     for root in roots:
         agg(root, None)
-    got = {r["vid"]: r for r in sub.collect()}
+    rows = sub.collect()
+    got = {r["vid"]: r for r in rows}
+    assert len(rows) == len(verts)
     assert set(got) == set(verts)
+    # tin is dense per component: 0 .. size(root) - 1
+    tins = collections.defaultdict(list)
+    for r in rows:
+        tins[r["comp"]].append(r["tin"])
+    for c, ts in tins.items():
+        assert sorted(ts) == list(range(len(ts))), f"comp {c}"
     for v in verts:
         r = got[v]
         assert (r["tin"], r["tout"], r["size"], r["low"], r["high"]) == (
@@ -283,3 +343,5 @@ def test_empty_and_single_edge(spark, tmp_path):
     df = spark.createDataFrame([(1, 2)], "src: long, dst: long")
     got = sorted(map(tuple, bridges(spark, df, cfg).collect()))
     assert got == [(1, 2)]
+    empty = spark.createDataFrame([], "src: long, dst: long")
+    assert bridges(spark, empty, cfg).collect() == []

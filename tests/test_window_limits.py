@@ -47,12 +47,11 @@ GLOBAL_WINDOW_FILES = {
     "operators/sweepcut.py": "k_max rows only (limit(k_max) upstream)",
     # pid-offset: the two-level range-partitioned prefix-sum idiom —
     # the global window runs over one row per partition
+    "plans/prefix.py": "#partitions offset rows",
     "operators/skyline.py": "#partitions offset rows",
-    "operators/euler.py": "#partitions offset rows",
-    "operators/experiment.py": "#partitions offsets + RxC cells",
+    "operators/experiment.py": "n_arms rows + RxC cells",
     "operators/evalmetrics.py": "#partitions offset rows",
     "operators/snm.py": "#blocks offset rows",
-    "operators/rankcorr.py": "#partitions offset rows",
     "operators/gini.py": "9 Benford digit cells",
     "operators/similarity.py": "n_centroids rows only (limit upstream)",
     # series/metadata-sized: windows over aggregated grids, not events
