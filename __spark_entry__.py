@@ -7118,21 +7118,30 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     the strict-inequality late filter, final watermark for the emit
     cut — acceptance-set equality makes the integer-cent totals
     bit-for-bit equal."""
+    import shutil
+    import tempfile
+
     from crgp_spark.functions import ts_micros
     from crgp_spark.streaming.late import (
         stream_late_counts,
         write_shuffled_chunks,
     )
 
-    work = "/tmp/crgp_stream_late"
-    feed = _events(spark, sf_dir).select(
-        "event_id", "event_type", "value", "ts",
-        ts_micros("ts").alias("us"),
-    )
-    write_shuffled_chunks(feed, work, _LATE_ORDER)
-    return stream_late_counts(
-        spark, work, window="1 hour", delay="144 hours"
-    )
+    # a directory of its own per call: concurrent runs must not
+    # overwrite each other's chunks; the result sits in a memory sink,
+    # so the chunks are dropped once the stream has drained
+    work = tempfile.mkdtemp(prefix="crgp_stream_late_")
+    try:
+        feed = _events(spark, sf_dir).select(
+            "event_id", "event_type", "value", "ts",
+            ts_micros("ts").alias("us"),
+        )
+        write_shuffled_chunks(feed, work, _LATE_ORDER)
+        return stream_late_counts(
+            spark, work, window="1 hour", delay="144 hours"
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

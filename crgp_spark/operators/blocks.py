@@ -1,8 +1,9 @@
 """Biconnected components (blocks) and articulation points — the
 vertex-connectivity siblings of `bridges.py`, on the same
-Euler-interval substrate and its two constructions (unrolled over the
-BFS forest when BFS drains within ``UNROLL_MAX_DEPTH + 1`` supersteps,
-else Borůvka forest + list-ranked unrooted Euler tour).
+Euler-interval substrate and its two constructions (root-path
+aggregates over the min-label wave's BFS forest when the wave drains
+within ``UNROLL_MAX_DEPTH + 1`` rounds, else Borůvka forest +
+list-ranked unrooted Euler tour).
 
 Tarjan–Vishkin 1985 auxiliary-graph reduction, in interval units
 (`euler.connectivity_substrate` supplies ``tin/tout/size/low/high``):

@@ -15,19 +15,24 @@ Exact, deterministic, all-DataFrame pipeline (no hashing, no
 randomness — unlike the XOR-sketch folklore trick, the output is
 bit-reproducible and oracle-checkable):
 
-1. **BFS spanning forest.** Roots = the component minimum vertex id
-   (`components.connected_components`); hop distances via the audited
-   multi-source `bfs.bfs_hops`; parent(v) = the MINIMUM neighbor one
-   hop closer.  Deterministic, and BFS depth = source eccentricity —
-   shallow for the small-world graphs this engine targets.
+1. **BFS spanning forest.** Roots = the component minimum vertex id;
+   parent(v) = the MINIMUM neighbor one hop closer.  Deterministic, and
+   BFS depth = source eccentricity — shallow for the small-world graphs
+   this engine targets.  `euler.connectivity_substrate` builds it as
+   one min-label wave (each vertex adopts the least smaller
+   ``(label, sender)``; the component minimum's label travels along
+   shortest paths), which also records every vertex's root path;
+   `bfs_forest` builds the same forest from `connected_components`, the
+   audited multi-source `bfs.bfs_hops` and a parent join, with no depth
+   cap.
 2. **Euler-tour interval labels + low/high** via
    `euler.connectivity_substrate` — O(V) label rows (replacing the
    former O(V · depth) ancestor closure, which was a genuine
-   100×-scale soft spot on deep graphs).  Two constructions: the BFS
-   forest of step 1 with the passes unrolled per level when BFS drains
-   within ``UNROLL_MAX_DEPTH + 1`` supersteps, else a Borůvka forest
-   rooted by list ranking an unrooted Euler tour — O(log n) supersteps
-   instead of O(depth).
+   100×-scale soft spot on deep graphs).  Two constructions: when the
+   wave drains within ``UNROLL_MAX_DEPTH + 1`` rounds, sizes, preorder
+   and low/high are aggregates over the exploded root paths; else a
+   Borůvka forest rooted by list ranking an unrooted Euler tour —
+   O(log n) supersteps instead of O(depth).
 3. **Low-link bridge test.** A tree edge above child ``c`` is a
    bridge iff NO non-tree edge crosses the subtree(c) boundary ⟺
    every single-hop non-tree reach from subtree(c) stays inside
@@ -76,15 +81,12 @@ def bfs_forest(
     edges: DataFrame,
     cfg: EngineConfig | None = None,
     max_iterations: int | None = None,
-    comp: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic BFS spanning forest of the undirected graph:
     ``(vid, comp, dist, parent)`` — one row per vertex touched by an
     edge, ``parent`` NULL exactly at the roots (the component-minimum
     vertices). Raises ``bfs.BFSBudgetExhausted`` when the BFS does not
-    drain within ``max_iterations`` supersteps. ``comp``, if given, is
-    the already-materialized ``(vid, component)`` labelling of the same
-    graph, used instead of running connected components here."""
+    drain within ``max_iterations`` supersteps."""
     cfg = cfg or EngineConfig()
     und = _canonical(edges).persist()
     adj = (
@@ -93,15 +95,14 @@ def bfs_forest(
         .persist()
     )
     try:
-        if comp is None:
-            # checkpointed once: comp feeds both the BFS roots and the
-            # output join, and would otherwise re-run its final
-            # aggregation per branch
-            comp = connected_components(
-                spark,
-                und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-                cfg, algo_name="bridges_cc",
-            ).localCheckpoint(eager=True)
+        # checkpointed once: comp feeds both the BFS roots and the
+        # output join, and would otherwise re-run its final aggregation
+        # per branch
+        comp = connected_components(
+            spark,
+            und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+            cfg, algo_name="bridges_cc",
+        ).localCheckpoint(eager=True)
         roots = comp.select(F.col("component").alias("vid")).distinct()
         dist = bfs_hops(
             spark,

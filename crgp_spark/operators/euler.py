@@ -19,17 +19,19 @@ input class.  Interval labels answer the same questions in O(V) rows:
   reconstructed cascade graph of reconstruct.rs:37-134 is what users
   run these resilience questions against downstream).
 
-Two constructions; `connectivity_substrate` probes the BFS forest for
-at most ``UNROLL_MAX_DEPTH + 1`` supersteps and picks by whether it
+Two constructions; `connectivity_substrate` runs a min-label wave for
+at most ``UNROLL_MAX_DEPTH + 1`` rounds and picks by whether it
 drained:
 
-* shallow (BFS depth ≤ ``UNROLL_MAX_DEPTH``): the BFS forest the
-  DuckDB oracles replay, with the sizes / tin / low / high passes
-  unrolled level-by-level into lazy Catalyst plans (~4·depth joins,
-  one checkpoint per pass) under the child-sorted (ascending vid) DFS
-  — exactly right for the shallow conversation graphs that dominate
-  the workload.
-* deep (the probe did not drain): a Borůvka spanning forest
+* shallow (BFS depth ≤ ``UNROLL_MAX_DEPTH``): the wave's fixpoint is
+  the BFS forest the DuckDB oracles replay (component-minimum roots,
+  parent = least neighbour one hop closer), and every vertex carries
+  its root path; sizes, the child-sorted (ascending vid) DFS ``tin`` and
+  low/high are aggregates over the exploded ``(vid, ancestor)`` rows —
+  at most ``(UNROLL_MAX_DEPTH + 1)·V`` of them, two checkpoints —
+  exactly right for the shallow conversation graphs that dominate the
+  workload.
+* deep (the wave did not drain): a Borůvka spanning forest
   (O(log V) supersteps, `msf.py`) rooted by an UNROOTED Euler tour —
   circuit arcs linked by locally-computed next pointers, positions by
   pointer-doubling list ranking (Tarjan-Vishkin / JáJá §3), dense
@@ -41,10 +43,13 @@ The consumers are spanning-tree independent, so both constructions
 give every consumer the same answer (their ``tin`` orders differ).
 
 Scale notes: every join keys on a vertex id or an integer array
-position; list-ranking state is 2(V-1) arc rows; the sparse table is
+position; the wave's state is V rows with paths of at most
+``UNROLL_MAX_DEPTH + 1`` ids and a round sends at most 2E messages;
+list-ranking state is 2(V-1) arc rows; the sparse table is
 O(V log V) rows built in O(log V) self-joins (each superstep
-``localCheckpoint`` + ``reset_stats`` — state ⋈ state doubling is the
-exact Catalyst-estimate-squaring case CLAUDE.md documents).  The only
+``localCheckpoint`` + ``reset_stats`` — state ⋈ state doubling, like
+the wave's state ⋈ messages-from-state, is the exact
+Catalyst-estimate-squaring case CLAUDE.md documents).  The only
 per-key serial regions are the sibling-ordering and adjacency windows
 (partitioned by vertex), bounded by the maximum degree — the same
 bound the previous closure construction had.
@@ -67,11 +72,11 @@ from crgp_spark.plans.superstep import (
 
 __all__ = ["connectivity_substrate", "UNROLL_MAX_DEPTH"]
 
-#: Up to this BFS forest depth the substrate is the unrolled plan
-#: (~4·depth joins, three jobs); the BFS probe runs one superstep more
-#: (depth d drains in d + 1) and a probe that does not drain hands the
-#: graph to the O(log V)-superstep Borůvka path.  Measured: target
-#: conversation graphs sit at depth ≤ 8.
+#: Up to this BFS forest depth the substrate is the min-label wave with
+#: path-derived labels (root paths of at most depth + 1 ids); the wave
+#: runs one round more (depth d drains in d + 1) and a wave that does
+#: not drain hands the graph to the O(log V)-superstep Borůvka path.
+#: Measured: target conversation graphs sit at depth ≤ 8.
 UNROLL_MAX_DEPTH = 12
 
 #: Pointer-doubling cap: 2^64 arcs is beyond any input; hitting the
@@ -80,126 +85,141 @@ _MAX_DOUBLINGS = 64
 
 
 # ---------------------------------------------------------------------------
-# shallow path: one lazy plan
+# shallow path: one min-label wave, labels from the root paths
 
 
-def _substrate_unrolled(
-    forest: DataFrame, nontree: DataFrame, maxd: int
-) -> DataFrame:
-    """Substrate in THREE jobs: bottom-up sizes, top-down tin,
-    bottom-up low/high — each pass unrolled over the
-    ≤ ``UNROLL_MAX_DEPTH`` levels into one lazy plan and checkpointed
-    once.  One checkpoint per PASS (not per level) keeps every plan
-    linear in the depth: a single fully-lazy plan nests the passes
-    cubically and OOMs Catalyst canonicalization at depth ~7."""
-    levels = {
-        d: forest.filter(F.col("dist") == d) for d in range(maxd + 1)
-    }
+def _wave_forest(und: DataFrame, cap: int) -> DataFrame:
+    """BFS spanning forest of ``und`` with each vertex's root path:
+    ``(vid, comp, dist, parent, path)``, ``path`` = root … ``vid``.
 
-    # pass 1 — bottom-up subtree sizes (linear chain of level joins)
-    sizes: dict[int, DataFrame] = {}
-    for d in range(maxd, -1, -1):
-        base = levels[d].select("vid", "dist")
-        if d == maxd:
-            sizes[d] = base.withColumn("size", F.lit(1).cast("long"))
-        else:
-            csum = (
-                levels[d + 1]
-                .select("vid", "parent")
-                .join(sizes[d + 1].drop("dist"), "vid")
-                .groupBy("parent")
-                .agg(F.sum("size").alias("_cs"))
-                .withColumnRenamed("parent", "vid")
-            )
-            sizes[d] = base.join(csum, "vid", "left").select(
-                "vid", "dist",
-                (F.lit(1) + F.coalesce(F.col("_cs"), F.lit(0)))
-                .cast("long")
-                .alias("size"),
-            )
-    size_all = sizes[0]
-    for d in range(1, maxd + 1):
-        size_all = size_all.unionByName(sizes[d])
-    size_all = size_all.localCheckpoint(eager=True)
-    size_lv = {
-        d: size_all.filter(F.col("dist") == d).drop("dist")
-        for d in range(maxd + 1)
-    }
+    A min-label wave.  Every vertex starts as its own label with
+    ``path = [vid]``.  In round ``r`` the vertices that changed in round
+    ``r - 1`` (``dist == r - 1``) send ``(comp, self, path)`` to their
+    neighbours, and a vertex adopts the least ``(comp, sender)`` whose
+    ``comp`` is below its own: ``parent`` = sender, ``dist`` = ``r``,
+    ``path`` = the sender's path + ``[vid]``.  The component minimum's
+    label moves one hop per round along shortest paths and nothing
+    undercuts it, so at the fixpoint ``comp`` is the component minimum,
+    ``dist`` the BFS hop count from it and ``parent`` the least
+    neighbour one hop closer — the forest `bridges.bfs_forest` builds
+    from components, BFS and a parent join.  Depth ``d`` changes nothing
+    in round ``d + 1``; a wave still changing in round ``cap`` raises
+    ``BFSBudgetExhausted``.  The changed count rides on each round's
+    checkpoint job."""
+    spark = und.sparkSession
+    adj = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
+        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
+    )
+    state, m = observed_checkpoint(
+        adj.select(F.col("a").alias("vid")).distinct().select(
+            "vid",
+            F.col("vid").alias("comp"),
+            F.lit(0).alias("dist"),
+            F.lit(None).cast("long").alias("parent"),
+            F.array("vid").alias("path"),
+        ),
+        "euler wave it=0",
+        n=F.count(F.lit(1)),
+    )
+    n = m["n"]
+    for r in range(1, cap + 1):
+        sent = state.filter(F.col("dist") == r - 1).select(
+            F.col("vid").alias("a"),
+            F.struct(
+                F.col("comp").alias("c"),
+                F.col("vid").alias("s"),
+                F.col("path").alias("p"),
+            ).alias("m"),
+        )
+        # the least (comp, sender) per receiver; the struct carries the
+        # path array, so no hash aggregate applies whichever way it is
+        # split
+        best = (
+            adj.join(state_hint(sent, n), "a")
+            .groupBy(F.col("b").alias("vid"))
+            .agg(F.min("m").alias("m"))
+        )
+        adopt = F.col("m.c") < F.col("comp")
+        state, m = observed_checkpoint(
+            state.join(state_hint(best, n), "vid", "left").select(
+                "vid",
+                F.when(adopt, F.col("m.c")).otherwise(F.col("comp")).alias(
+                    "comp"
+                ),
+                F.when(adopt, F.lit(r)).otherwise(F.col("dist")).alias("dist"),
+                F.when(adopt, F.col("m.s"))
+                .otherwise(F.col("parent"))
+                .alias("parent"),
+                F.when(adopt, F.concat(F.col("m.p"), F.array("vid")))
+                .otherwise(F.col("path"))
+                .alias("path"),
+            ),
+            f"euler wave it={r}",
+            changed=F.count(F.when(F.col("dist") == r, 1)),
+        )
+        # state ⋈ f(state) every round: pin the size estimate flat
+        state = reset_stats(state)
+        _release_stale_checkpoints(spark, r)
+        if not m["changed"]:
+            return state
+    raise BFSBudgetExhausted(
+        f"euler wave: {m['changed']} vertices still changed in round "
+        f"{cap}; the forest is deeper than {cap - 1}"
+    )
 
-    # pass 2 — top-down preorder tin: tin(v) = tin(parent) + 1 +
-    # Σ sizes of lesser siblings (ascending-vid child order; the
-    # sibling window is per-parent — bounded by the max degree)
-    tins: dict[int, DataFrame] = {
-        0: levels[0].select("vid", F.lit(0).cast("long").alias("tin"))
-    }
+
+def _substrate_paths(forest: DataFrame, nontree: DataFrame) -> DataFrame:
+    """Child-sorted (ascending vid) DFS labels of a wave forest in two
+    checkpoints.  Each root path explodes into ``(vid, anc)`` rows — at
+    most ``(UNROLL_MAX_DEPTH + 1)·V``, the path length being capped by
+    the wave — and every label is an aggregate over them:
+
+    - ``size(a)`` = the number of rows with ancestor ``a``;
+    - ``tin(v) = dist(v) + Σ_{a ∈ path(v)} pre(a)``, where ``pre(a)`` is
+      the sum of the sizes of ``a``'s lesser siblings (the recurrence
+      ``tin(v) = tin(parent) + 1 + pre(v)`` summed down the path; the
+      sibling window is per parent, bounded by the max degree);
+    - ``low/high(a)`` = min/max of `_nontree_reach` over ``a``'s rows."""
+    anc = forest.select("vid", F.explode("path").alias("anc"))
+    size = anc.groupBy(F.col("anc").alias("vid")).agg(
+        F.count(F.lit(1)).alias("size")
+    )
     w_sib = (
         Window.partitionBy("parent")
         .orderBy("vid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    for d in range(1, maxd + 1):
-        sib = (
-            levels[d]
-            .select("vid", "parent")
-            .join(size_lv[d], "vid")
-            .withColumn(
-                "_pre", F.coalesce(F.sum("size").over(w_sib), F.lit(0))
-            )
+    # roots have pre 0: they stay out of the window (one partition
+    # holding every root would be a serial region) and of the sum
+    pre = (
+        forest.filter(F.col("parent").isNotNull())
+        .select("vid", "parent")
+        .join(size, "vid")
+        .select(
+            F.col("vid").alias("anc"),
+            F.coalesce(F.sum("size").over(w_sib), F.lit(0)).alias("_pre"),
         )
-        ptin = tins[d - 1].select(
-            F.col("vid").alias("parent"), F.col("tin").alias("_ptin")
-        )
-        tins[d] = sib.join(ptin, "parent").select(
-            "vid",
-            (F.col("_ptin") + 1 + F.col("_pre")).cast("long").alias("tin"),
-        )
-    tin_all = tins[0]
-    for d in range(1, maxd + 1):
-        tin_all = tin_all.unionByName(tins[d])
-
+    )
+    psum = anc.join(pre, "anc").groupBy("vid").agg(F.sum("_pre").alias("_ps"))
     iv = (
-        forest.join(size_all.drop("dist"), "vid")
-        .join(tin_all, "vid")
+        forest.join(size, "vid")
+        .join(psum, "vid", "left")
+        .select(
+            "vid", "comp", "dist", "parent",
+            (F.col("dist") + F.coalesce(F.col("_ps"), F.lit(0)))
+            .cast("long")
+            .alias("tin"),
+            F.col("size").cast("long").alias("size"),
+        )
         .withColumn("tout", (F.col("tin") + F.col("size") - 1).cast("long"))
         .localCheckpoint(eager=True)
     )
-
-    # pass 3 — per-vertex non-tree reach in tin units, bottom-up min/max
-    vals = _nontree_reach(iv, nontree).localCheckpoint(eager=True)
-    lows: dict[int, DataFrame] = {}
-    for d in range(maxd, -1, -1):
-        base = vals.filter(F.col("dist") == d).select("vid", "nlow", "nhigh")
-        if d == maxd:
-            lows[d] = base.select(
-                "vid",
-                F.col("nlow").alias("low"),
-                F.col("nhigh").alias("high"),
-            )
-        else:
-            cagg = (
-                levels[d + 1]
-                .select("vid", "parent")
-                .join(lows[d + 1], "vid")
-                .groupBy("parent")
-                .agg(
-                    F.min("low").alias("_cl"), F.max("high").alias("_ch")
-                )
-                .withColumnRenamed("parent", "vid")
-            )
-            lows[d] = base.join(cagg, "vid", "left").select(
-                "vid",
-                F.least(
-                    "nlow", F.coalesce(F.col("_cl"), F.col("nlow"))
-                ).alias("low"),
-                F.greatest(
-                    "nhigh", F.coalesce(F.col("_ch"), F.col("nhigh"))
-                ).alias("high"),
-            )
-    low_all = lows[0]
-    for d in range(1, maxd + 1):
-        low_all = low_all.unionByName(lows[d])
-
-    return iv.join(low_all, "vid").select(
+    lohi = (
+        anc.join(_nontree_reach(iv, nontree), "vid")
+        .groupBy(F.col("anc").alias("vid"))
+        .agg(F.min("nlow").alias("low"), F.max("nhigh").alias("high"))
+    )
+    return iv.join(lohi, "vid").select(
         "vid", "comp", "dist", "parent", "tin", "tout", "size", "low", "high"
     )
 
@@ -451,7 +471,7 @@ def _subtree_minmax_sparse(
 
 
 # ---------------------------------------------------------------------------
-# top level: BFS probe, then one of the two constructions
+# top level: the wave, then one of the two constructions
 
 
 def connectivity_substrate(
@@ -463,11 +483,11 @@ def connectivity_substrate(
     graph ``und`` (canonical ``(u, v)``, ``u < v``), rooted at the
     component-minimum vertices.
 
-    A BFS forest probe runs for at most ``UNROLL_MAX_DEPTH + 1``
-    supersteps.  If it drains (depth ≤ ``UNROLL_MAX_DEPTH`` — the
-    target small-world workload), the substrate is the unrolled plan
-    over that BFS forest, the construction the DuckDB oracles replay.
-    Otherwise it is a Borůvka spanning forest (O(log V) supersteps,
+    A min-label wave runs for at most ``UNROLL_MAX_DEPTH + 1`` rounds.
+    If it drains (depth ≤ ``UNROLL_MAX_DEPTH`` — the target
+    small-world workload), its fixpoint is the BFS forest the DuckDB
+    oracles replay, and the labels come from each vertex's root path.
+    Otherwise the substrate is a Borůvka spanning forest (O(log V) supersteps,
     `msf.py`) rooted by an UNROOTED Euler tour — next pointers from
     plain sorted cyclic adjacency, parent = tail of each vertex's
     first-entry arc — so no step is O(depth).  The final
@@ -481,26 +501,12 @@ def connectivity_substrate(
     ``tin(v)`` itself, so they are always defined).  ``dist`` is NULL
     on the deep path — hop depths are a BFS notion.
     """
-    from crgp_spark.operators.bridges import bfs_forest  # deferred: cycle
-
     cfg = cfg or EngineConfig()
     und = und.localCheckpoint(eager=True)
-    # one components run serves both constructions: the BFS roots, and
-    # the root test of the deep path's Euler rooting
-    comp = _components(spark, und, cfg)
     try:
-        forest = bfs_forest(
-            spark,
-            und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-            cfg,
-            max_iterations=UNROLL_MAX_DEPTH + 1,
-            comp=comp,
-        )
+        forest = _wave_forest(und, UNROLL_MAX_DEPTH + 1)
     except BFSBudgetExhausted:
-        # the roots are every component's minimum vertex, so a BFS that
-        # drains within the probe reaches every vertex: the drain
-        # signal IS the coverage check
-        return _deep_substrate(spark, und, cfg, comp)
+        return _deep_substrate(spark, und, cfg)
     tree = forest.filter(F.col("parent").isNotNull()).select(
         F.least("vid", "parent").alias("u"),
         F.greatest("vid", "parent").alias("v"),
@@ -508,42 +514,28 @@ def connectivity_substrate(
     nontree = und.join(tree, ["u", "v"], "left_anti").localCheckpoint(
         eager=True
     )
-    # NULL only for an empty graph, whose substrate is empty at depth 0
-    maxd = forest.agg(F.max("dist")).collect()[0][0] or 0
-    return _substrate_unrolled(forest, nontree, maxd).localCheckpoint(
-        eager=True
-    )
-
-
-def _components(
-    spark: SparkSession, und: DataFrame, cfg: EngineConfig
-) -> DataFrame:
-    """``(vid, component)`` of ``und``, checkpointed: it feeds several
-    branches downstream."""
-    from crgp_spark.operators.components import connected_components
-
-    return connected_components(
-        spark,
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        cfg,
-        algo_name="euler_cc",
-    ).localCheckpoint(eager=True)
+    return _substrate_paths(forest, nontree).localCheckpoint(eager=True)
 
 
 def _deep_substrate(
-    spark: SparkSession,
-    und: DataFrame,
-    cfg: EngineConfig,
-    comp: DataFrame | None = None,
+    spark: SparkSession, und: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
     """Deep-graph substrate: Borůvka forest + unrooted Euler rooting —
-    O(log V) supersteps end to end, never O(depth). ``comp`` is the
-    ``(vid, component)`` labelling of ``und`` if the caller has it."""
+    O(log V) supersteps end to end, never O(depth)."""
+    from crgp_spark.operators.components import connected_components
     from crgp_spark.operators.msf import minimum_spanning_forest
 
-    if comp is None:
-        comp = _components(spark, und, cfg)
-    comp = comp.select("vid", F.col("component").alias("comp"))
+    # checkpointed: comp feeds both the arc labels and the roots
+    comp = (
+        connected_components(
+            spark,
+            und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+            cfg,
+            algo_name="euler_cc",
+        )
+        .select("vid", F.col("component").alias("comp"))
+        .localCheckpoint(eager=True)
+    )
     # w = 0 everywhere: the (w, u, v) total order makes this the unique
     # lexicographic-minimum spanning forest — deterministic
     fe = minimum_spanning_forest(

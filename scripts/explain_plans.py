@@ -726,10 +726,10 @@ def main() -> None:
 
     _bsub = connectivity_substrate(spark, _bridge_canon(e_vid), cfg)
     sections.update({
-        "Bridges low-link test over the Euler interval substrate: O(V) "
-        "label rows (replacing the O(V*depth) ancestor closure), one "
-        "scan-speed filter — bridge iff no non-tree reach escapes "
-        "[tin, tout]": _bsub.filter(F.col("parent").isNotNull()).filter(
+        "Bridges low-link test over the Euler interval substrate "
+        "(min-label wave forest, labels aggregated over root paths): "
+        "O(V) label rows, one scan-speed filter — bridge iff no "
+        "non-tree reach escapes [tin, tout]": _bsub.filter(F.col("parent").isNotNull()).filter(
             (F.col("low") >= F.col("tin"))
             & (F.col("high") <= F.col("tout"))
         ).select(

@@ -1,10 +1,11 @@
 """Euler-tour interval substrate (operators/euler.py): the
 scale-safe replacement for the former O(V·depth) ancestor closure.
 
-Covers both constructions (unrolled plan over the BFS forest, deep
-Borůvka + unrooted Euler rooting) against a sequential Python DFS
-replica — the deep one also on ~8k shuffled vertices in over a
-thousand components, past the range sampler's full-coverage point —
+Covers both constructions (the min-label wave forest with
+path-derived labels, deep Borůvka + unrooted Euler rooting) against a
+Python BFS forest and a sequential Python DFS replica — both also on
+thousands of shuffled vertices in a thousand components or more, the
+deep one past the range sampler's full-coverage point —
 plus bridges/articulation on a mid-depth graph that takes the Borůvka
 route, and the deep-graph regression the closure could not pass: a
 1,000-deep chain, where BFS-forest construction alone would need
@@ -39,22 +40,31 @@ def _cfg(tmp_path):
     )
 
 
-def _forest_and_nontree(spark, pairs, cfg):
-    df = spark.createDataFrame(pairs, "src: long, dst: long")
-    und = _canonical(df).localCheckpoint(eager=True)
-    forest = bfs_forest(
-        spark,
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        cfg,
-    )
-    tree = forest.filter(F.col("parent").isNotNull()).select(
-        F.least("vid", "parent").alias("u"),
-        F.greatest("vid", "parent").alias("v"),
-    )
-    nontree = und.join(tree, ["u", "v"], "left_anti").localCheckpoint(
-        eager=True
-    )
-    return und, forest, nontree
+def _python_bfs_forest(pairs):
+    """``vid -> (comp, dist, parent)`` of the simple graph: roots at the
+    component minima, BFS hop counts, parent = the least neighbour one
+    hop closer."""
+    adj = collections.defaultdict(set)
+    for u, v in pairs:
+        if u != v:
+            adj[u].add(v)
+            adj[v].add(u)
+    out = {}
+    for root in sorted(adj):
+        if root in out:
+            continue
+        out[root] = (root, 0, None)
+        frontier, d = [root], 0
+        while frontier:
+            d += 1
+            nxt = [y for x in frontier for y in adj[x] if y not in out]
+            for y in nxt:
+                out[y] = (root, d, None)
+            frontier = nxt
+    return {
+        v: (c, d, min(y for y in adj[v] if out[y][1] == d - 1) if d else None)
+        for v, (c, d, _) in out.items()
+    }
 
 
 def _python_replica(forest_rows, nontree_rows):
@@ -124,26 +134,8 @@ def _random_pairs(seed, n_verts, n_edges):
     return pairs
 
 
-def test_unrolled_matches_python_dfs(spark, tmp_path):
-    cfg = _cfg(tmp_path)
-    und, forest, nontree = _forest_and_nontree(
-        spark, _random_pairs(3, 40, 50), cfg
-    )
-    maxd = int(forest.agg(F.max("dist")).collect()[0][0])
-    assert maxd <= euler.UNROLL_MAX_DEPTH  # exercises the unrolled path
-    sub = euler.connectivity_substrate(spark, und, cfg).collect()
-    forest_rows = forest.collect()
-    assert {(r["vid"], r["dist"], r["parent"]) for r in sub} == {
-        (r["vid"], r["dist"], r["parent"]) for r in forest_rows
-    }
-    _check_substrate(
-        sub, forest_rows,
-        [tuple(r) for r in nontree.select("u", "v").collect()],
-    )
-
-
 def test_mid_depth_bridges_and_articulation(spark, tmp_path, monkeypatch):
-    """BFS depth 26 — past the unrolled probe, far short of the chain
+    """BFS depth 26 — past the wave's depth cap, far short of the chain
     tests: the Borůvka route (``dist`` NULL in the substrate) must give
     the brute-force bridges and articulation points."""
     cfg = _cfg(tmp_path)
@@ -221,6 +213,52 @@ def _many_component_pairs(seed, n_comps):
         pairs += [tuple(rng.sample(vs, 2)) for _ in range(2)]
     rng.shuffle(pairs)
     return pairs
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        "random",
+        # 1,000 shuffled components of depth <= 9: waves from many roots
+        # run side by side in every round
+        "many_components",
+    ],
+)
+def test_shallow_substrate_matches_python_dfs(spark, tmp_path, shape):
+    """The min-label wave forest equals the Python BFS forest and
+    `bfs_forest`; its path-derived labels equal the child-sorted DFS
+    replica."""
+    cfg = _cfg(tmp_path)
+    if shape == "random":
+        pairs = _random_pairs(3, 40, 50)
+        df = spark.createDataFrame(pairs, "src: long, dst: long")
+    else:
+        pairs = _many_component_pairs(7, 1_000)
+        df = spark.createDataFrame(pairs, "src: long, dst: long").repartition(8)
+    und = _canonical(df).localCheckpoint(eager=True)
+    want = _python_bfs_forest(pairs)
+    # exercises the shallow path
+    assert max(d for _, d, _ in want.values()) <= euler.UNROLL_MAX_DEPTH
+    sub = euler.connectivity_substrate(spark, und, cfg).collect()
+    assert len(sub) == len(want)
+    assert {r["vid"]: (r["comp"], r["dist"], r["parent"]) for r in sub} == want
+    forest = bfs_forest(
+        spark, und.select(F.col("u").alias("src"), F.col("v").alias("dst")), cfg
+    ).collect()
+    assert {
+        r["vid"]: (r["comp"], r["dist"], r["parent"]) for r in forest
+    } == want
+    tree = {
+        (min(v, p), max(v, p))
+        for v, (_, _, p) in want.items()
+        if p is not None
+    }
+    simple = {(min(u, v), max(u, v)) for u, v in pairs if u != v}
+    _check_substrate(
+        sub,
+        [{"vid": v, "parent": p} for v, (_, _, p) in want.items()],
+        sorted(simple - tree),
+    )
 
 
 @pytest.mark.parametrize(

@@ -21,12 +21,16 @@ import pytest
 
 from crgp_spark.config import EngineConfig
 from crgp_spark.operators.bfs import bfs_hops
+from crgp_spark.operators.blocks import articulation_points
+from crgp_spark.operators.bridges import bridges
 from crgp_spark.operators.components import connected_components
 from crgp_spark.operators.pagerank import pagerank_df
 from crgp_spark.operators.scc import strongly_connected_components
 from tests.oracles import random_edges
 
 CEILINGS = {
+    "articulation_points": 145,
+    "bridges": 62,
     "pagerank_df": 26,
     "bfs_hops": 43,
     "connected_components": 55,
@@ -57,6 +61,10 @@ def _jobs(spark, fn) -> int:
 
 
 RUNS = {
+    "articulation_points": lambda s, e, src, cfg: articulation_points(
+        s, e, cfg
+    ),
+    "bridges": lambda s, e, src, cfg: bridges(s, e, cfg),
     "pagerank_df": lambda s, e, src, cfg: pagerank_df(
         s, e, cfg, fixed_iterations=3
     ),
