@@ -13,21 +13,32 @@ partition-local:
 - block = all edges of the conversations assigned to the partition,
   CSR by src, plus the partition's full vertex set and global
   out-degrees;
-- state ``(part, vid, rank)`` lives hash-partitioned by ``part`` and
-  never moves;
-- the ONLY cross-partition data per superstep is the dangling-mass
-  scalar (64 partial sums collected to the driver) — the analog of the
-  reference's epoch barrier, shrunk to its information-theoretic
-  minimum.
+- state ``(part, vid, rank)`` lives in the partition of its ``part``;
+- a superstep is ONE ``groupBy("part").applyInPandas`` exchange whose
+  kernel gathers, combines per destination AND applies the rank update,
+  feeding one observed checkpoint (``plans/superstep.observed_
+  checkpoint``). The only cross-partition scalar is the dangling mass —
+  the analog of the reference's epoch barrier. It is observed on the
+  checkpoint job as ``sum(rank where out_deg = 0)`` and applied one
+  superstep later: the kernel that reads ranks ``r`` adds the dangling
+  mass of ``r``, observed when ``r`` was checkpointed (at init, on the
+  init checkpoint; on resume, on the checkpoint that rebuilds the
+  replicas). Same formula, no driver round-trip inside the superstep.
 
 Hub skew (north rule R1): a conversation whose edge count exceeds
 ``hub_degree_threshold`` is split into up to ``max_salt`` salted
 sub-blocks by ``hash(dst)`` — a destination's in-edges stay in one
 sub-block, so per-dst sums remain complete; only the RANKS of sources
-whose out-edges land in a foreign sub-block are replicated there each
-superstep (a broadcast-joinable sliver proportional to split-conv
-sources, not to |E|). With no split conversations the superstep runs
-with ZERO exchanges.
+whose out-edges land in a foreign sub-block are replicated there. The
+kernel ships them itself: besides its resident rows it emits, for each
+resident source with out-edges in a foreign sub-block, a replica row
+``(foreign part, vid, new rank)`` (the per-block list is the
+``home`` slice of the placement table, cached per worker like the
+block). The next superstep's exchange on ``part`` delivers them, so no
+superstep joins state with the placement. Replica rows never reach a
+committed checkpoint: they carry ``_changed = false`` and are filtered
+out of the state the loop commits, so a checkpoint holds one row per
+vertex and resume rebuilds the replicas once, with one placement join.
 
 Checkpoints/lineage/resume ride the same ``run_loop`` harness as the
 generic path; results match ``pagerank_df`` (same formula, same
@@ -48,26 +59,39 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.plans.superstep import LoopResult, StepOutcome, run_loop
+from crgp_spark.operators.pack import PACK_FORMAT_VERSION, _BLOCK_CACHE, _cache_put
+from crgp_spark.plans.superstep import (
+    LoopResult,
+    StepOutcome,
+    observed_checkpoint,
+    reset_stats,
+    run_loop,
+)
 
-#: per-vertex rows out of the kernel; one side row per partition
-#: (kind=1) carries (dangling_partial, contrib_total) in (c, r_old).
+#: kernel output: the new state rows (``_rep`` marks a replica shipped
+#: to a foreign sub-block) plus the per-row inputs of the observed
+#: superstep scalars; replica rows carry zero delta, zero in-contribution,
+#: ``_changed = false`` and ``_dangling = false``.
 _OUT_SCHEMA = T.StructType(
     [
         T.StructField("part", T.IntegerType(), False),
-        T.StructField("kind", T.ByteType(), False),
         T.StructField("vid", T.LongType(), False),
+        T.StructField("rank", T.DoubleType(), False),
+        T.StructField("_rep", T.BooleanType(), False),
+        T.StructField("_changed", T.BooleanType(), False),
+        T.StructField("_delta", T.DoubleType(), False),
         T.StructField("c", T.DoubleType(), False),
-        T.StructField("r_old", T.DoubleType(), False),
+        T.StructField("_dangling", T.BooleanType(), False),
     ]
 )
 
-_STATE_SCHEMA = "part int, vid long, rank double"
+#: the loop state a superstep reads: resident rows and replica rows
+_STATE_COLUMNS = ["part", "vid", "rank", "_rep"]
 
 
 def placement_path(pack_path: str) -> str:
@@ -181,30 +205,36 @@ def pack_cascade(edges: DataFrame, cfg: EngineConfig, path: str) -> dict:
         "vdeg array<long>, src_ids array<long>, src_deg array<long>, "
         "indptr array<long>, dst array<long>",
     )
-    blocks.write.mode("overwrite").partitionBy("part").parquet(path)
+    # pack statistics ride on the two writes (no re-read of the output)
+    block_obs, placement_obs = Observation(), Observation()
+    blocks.observe(
+        block_obs,
+        F.count(F.lit(1)).alias("n_parts"),
+        F.sum("n_edges").alias("n_edges"),
+        F.max("n_edges").alias("max_edges"),
+        F.avg("n_edges").alias("mean_edges"),
+        F.sum("n_v").alias("n_verts"),
+        F.map_from_entries(F.collect_list(F.struct("part", "n_edges"))).alias(
+            "part_edges"
+        ),
+    ).write.mode("overwrite").partitionBy("part").parquet(path)
 
-    # replica placement: sources whose out-edges sit in a foreign block
+    # replica placement: sources whose out-edges sit in a foreign block,
+    # with the home block that ships their rank there
     homes = verts.select(F.col("vid").alias("src"), F.col("part").alias("home"))
     placement = (
         ann.select("src", "part")
         .distinct()
         .join(homes, "src")
         .filter(F.col("part") != F.col("home"))
-        .select(F.col("src").alias("vid"), "part")
+        .select(F.col("src").alias("vid"), "part", "home")
     )
-    placement.write.mode("overwrite").parquet(placement_path(path))
+    placement.observe(
+        placement_obs, F.count(F.lit(1)).alias("n_replicas")
+    ).write.mode("overwrite").parquet(placement_path(path))
 
-    r = spark.read.parquet(path).agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.sum("n_edges").alias("n_edges"),
-        F.max("n_edges").alias("max_edges"),
-        F.avg("n_edges").alias("mean_edges"),
-        F.sum("n_v").alias("n_verts"),
-    ).first()
-    n_replicas = spark.read.parquet(placement_path(path)).count()
+    r = block_obs.get
     import uuid
-
-    from crgp_spark.operators.pack import PACK_FORMAT_VERSION
 
     stats = {
         # cache-invalidation fingerprint, see pack.py::load_block
@@ -216,17 +246,22 @@ def pack_cascade(edges: DataFrame, cfg: EngineConfig, path: str) -> dict:
         "mean_edges": float(r["mean_edges"]),
         "skew_ratio": float(r["max_edges"]) / max(float(r["mean_edges"]), 1.0),
         "n_verts": int(r["n_verts"]),
-        "n_replicas": n_replicas,
+        "n_replicas": int(placement_obs.get["n_replicas"]),
         "graph_partitions": P,
+        # per-block edge counts (JSON keys are strings): lineage rows
+        "part_edges": {str(k): int(v) for k, v in r["part_edges"].items()},
     }
     with open(os.path.join(path, "_pack_stats.json"), "w") as f:
         json.dump(stats, f)
     return stats
 
 
-def _load_cascade_block(path: str, part: int, pack_id: str | None = None):
-    from crgp_spark.operators.pack import _BLOCK_CACHE, _cache_put
-
+def _load_cascade_block(
+    path: str, part: int, pack_id: str | None, has_replicas: bool
+):
+    """One block's CSR arrays plus its replica list (``rep_vid`` resident
+    here, ``rep_part`` the foreign sub-block that needs its rank),
+    cached per worker process under the pack's fingerprint."""
     key = (path, part, "cascade", pack_id)
     blk = _BLOCK_CACHE.get(key)
     if blk is None:
@@ -239,14 +274,34 @@ def _load_cascade_block(path: str, part: int, pack_id: str | None = None):
             name: tbl[name][0].values.to_numpy(zero_copy_only=False)
             for name in ("vids", "vdeg", "src_ids", "src_deg", "indptr", "dst")
         }
+        blk["rep_vid"] = np.empty(0, dtype=np.int64)
+        blk["rep_part"] = np.empty(0, dtype=np.int32)
+        if has_replicas:
+            reps = ds.dataset(placement_path(path), format="parquet").to_table(
+                columns=["vid", "part"], filter=ds.field("home") == part
+            )
+            blk["rep_vid"] = reps["vid"].to_numpy()
+            blk["rep_part"] = reps["part"].to_numpy().astype(np.int32)
         _cache_put(key, blk)
     return blk
 
 
-def _make_kernel(pack_path: str, pack_id: str | None = None):
+def _make_kernel(
+    pack_path: str,
+    pack_id: str | None,
+    has_replicas: bool,
+    alpha: float,
+    n: int,
+    dangling_mass: float,
+):
+    """The superstep kernel for one sub-block: gather the in-block
+    contributions of every source rank it receives (resident or
+    replica), apply ``(1-α)/n + α·(c + dangling_mass/n)`` and emit the
+    resident rows plus the replicas of their new ranks."""
+
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         part = int(pdf["part"].iloc[0])
-        blk = _load_cascade_block(pack_path, part, pack_id)
+        blk = _load_cascade_block(pack_path, part, pack_id, has_replicas)
         vids, vdeg = blk["vids"], blk["vdeg"]
         src_ids, indptr, dst = blk["src_ids"], blk["indptr"], blk["dst"]
 
@@ -273,22 +328,28 @@ def _make_kernel(pack_path: str, pack_id: str | None = None):
 
         # scatter back onto the vertex table (complete per dst)
         c = np.zeros(len(vids), dtype=np.float64)
-        cpos = np.searchsorted(vids, uniq)
-        c[cpos] = sums
+        c[np.searchsorted(vids, uniq)] = sums
+        new = (1.0 - alpha) / n + alpha * (c + dangling_mass / n)
 
-        dang = float(rank[vdeg == 0].sum())
-        out = pd.DataFrame(
+        # replicas: new ranks of resident sources, addressed to the
+        # foreign sub-blocks holding their other out-edges
+        rep_vid = blk["rep_vid"]
+        k = len(rep_vid)
+        no, yes = np.zeros(k, dtype=bool), np.ones(k, dtype=bool)
+        return pd.DataFrame(
             {
-                "part": np.full(len(vids) + 1, part, dtype=np.int32),
-                "kind": np.concatenate(
-                    [np.zeros(len(vids), dtype=np.int8), [1]]
+                "part": np.concatenate(
+                    [np.full(len(vids), part, dtype=np.int32), blk["rep_part"]]
                 ),
-                "vid": np.concatenate([vids, [-1]]),
-                "c": np.concatenate([c, [dang]]),
-                "r_old": np.concatenate([rank, [float(sums.sum())]]),
+                "vid": np.concatenate([vids, rep_vid]),
+                "rank": np.concatenate([new, new[np.searchsorted(vids, rep_vid)]]),
+                "_rep": np.concatenate([np.zeros(len(vids), dtype=bool), yes]),
+                "_changed": np.concatenate([new != rank, no]),
+                "_delta": np.concatenate([np.abs(new - rank), np.zeros(k)]),
+                "c": np.concatenate([c, np.zeros(k)]),
+                "_dangling": np.concatenate([vdeg == 0, no]),
             }
         )
-        return out
 
     return kernel
 
@@ -311,11 +372,9 @@ def pagerank_cascade(
     if (resume or reuse_pack) and os.path.exists(stats_file):
         with open(stats_file) as f:
             pstats = json.load(f)
-        from crgp_spark.operators.pack import PACK_FORMAT_VERSION
-
-        # A pack written by an older layout (absent version = v1, nested
-        # _placement dir) must not be reused — the sibling placement path
-        # was never written and replicas would be silently lost.
+        # A pack written by an older layout must not be reused: v1
+        # nested the placement dir (replicas silently lost), v2 lacks
+        # the placement's home column and the per-block edge counts.
         if pstats.get("format_version") != PACK_FORMAT_VERSION:
             pstats = None
     if pstats is None:
@@ -323,104 +382,122 @@ def pagerank_cascade(
 
     n = pstats["n_verts"]
     mean_edges = max(pstats["mean_edges"], 1.0)
-    blocks_meta = {
-        int(r["part"]): int(r["n_edges"])
-        for r in spark.read.parquet(pack_path).select("part", "n_edges").collect()
-    }
-    placement = spark.read.parquet(placement_path(pack_path)).persist()
-    has_replicas = placement.count() > 0
-
-    verts_home = (
-        spark.read.parquet(pack_path)
-        .select("part", F.explode("vids").alias("vid"))
+    # lineage rows come from the pack's per-block edge counts
+    parts = sorted(int(p) for p in pstats["part_edges"])
+    scanned = np.array(
+        [pstats["part_edges"][str(p)] for p in parts], dtype=np.int64
     )
-    kernel = _make_kernel(pack_path, pstats.get("pack_id"))
+    has_replicas = pstats["n_replicas"] > 0
     alpha, tol = cfg.damping, cfg.tol
     if cfg.tol_mode == "scaled":
         tol = tol / n
 
-    def init_state() -> DataFrame:
-        return (
-            verts_home.select("part", "vid", F.lit(1.0 / n).alias("rank"))
-            .repartition(cfg.graph_partitions, "part")
-            .localCheckpoint(eager=True)
+    # resident vertex rows with their dangling flag, from the blocks
+    homes = (
+        spark.read.parquet(pack_path)
+        .select("part", F.explode(F.arrays_zip("vids", "vdeg")).alias("z"))
+        .select(
+            "part",
+            F.col("z.vids").alias("vid"),
+            (F.col("z.vdeg") == 0).alias("_dangling"),
         )
+    )
+    dangling_mass = F.sum(F.when(F.col("_dangling"), F.col("rank")))
+    # the state a superstep reads (resident + replica rows) and the
+    # dangling mass of its ranks, observed when it was checkpointed
+    carry: dict = {}
+
+    def seed(ranks: DataFrame | None) -> DataFrame:
+        """Checkpoint the loop state with its replica rows: all ranks
+        1/n at init, else the (one-row-per-vertex) ``ranks`` a resume
+        loaded, shipped to the replicas with one placement join."""
+        home, reps = homes, None
+        if ranks is None:
+            home = home.withColumn("rank", F.lit(1.0 / n))
+        else:
+            home = home.join(ranks.select("vid", "rank"), "vid")
+        if has_replicas:
+            reps = spark.read.parquet(placement_path(pack_path)).select(
+                "part", "vid"
+            )
+            reps = (
+                reps.withColumn("rank", F.lit(1.0 / n))
+                if ranks is None
+                else reps.join(ranks.select("vid", "rank"), "vid")
+            )
+        full = home.withColumn("_rep", F.lit(False))
+        if reps is not None:
+            full = full.unionByName(
+                reps.withColumn("_rep", F.lit(True)).withColumn(
+                    "_dangling", F.lit(False)
+                )
+            )
+        ck, m = observed_checkpoint(
+            full,
+            f"{algo_name} seed",
+            columns=_STATE_COLUMNS,
+            dangling_mass=dangling_mass,
+        )
+        return _carry(ck, m["dangling_mass"])
+
+    def _carry(ck: DataFrame, mass: float | None) -> DataFrame:
+        # replica rows sit in the partition of the task that emitted
+        # them, not of their ``part``: drop the checkpoint's inherited
+        # partitioning claim so the next ``groupBy("part")`` always
+        # re-exchanges (a kept claim would deliver no replica)
+        ck = reset_stats(ck)
+        resident = ck.filter(~F.col("_rep")).drop("_rep")
+        carry.update(
+            state=ck, resident=resident, dangling=float(mass or 0.0)
+        )
+        return resident
 
     def step(state: DataFrame, it: int) -> StepOutcome:
-        msgs_in = state
-        if has_replicas:
-            # no explicit broadcast hint: placement is tiny by design
-            # (split-conv sources only) so AQE broadcasts it, but a
-            # pathological all-split input must not OOM the driver
-            reps = (
-                placement.withColumnRenamed("part", "to_part")
-                .join(state.select("vid", "rank"), "vid")
-                .select(F.col("to_part").alias("part"), "vid", "rank")
-            )
-            msgs_in = state.select("part", "vid", "rank").unionByName(reps)
-
-        out = msgs_in.groupBy("part").applyInPandas(kernel, _OUT_SCHEMA).persist()
-        side = out.filter(F.col("kind") == 1).collect()
-        dang = float(sum(r["c"] for r in side))
-        total_contrib = float(sum(r["r_old"] for r in side))
-
-        new_state = (
-            out.filter(F.col("kind") == 0)
-            .select(
-                "part",
-                "vid",
-                (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha) * (F.col("c") + F.lit(dang / n))
-                ).alias("rank"),
-                F.col("r_old"),
-            )
-            .withColumn("_delta", F.abs(F.col("rank") - F.col("r_old")))
-            .withColumn("_changed", F.col("rank") != F.col("r_old"))
-            .drop("r_old")
-            .localCheckpoint(eager=True)
+        if state is not carry.get("resident"):
+            seed(state)  # a resumed state: rebuild its replicas once
+        dangling = carry["dangling"]
+        kernel = _make_kernel(
+            pack_path, pstats.get("pack_id"), has_replicas, alpha, n, dangling
         )
-        agg = new_state.agg(
-            F.max("_delta").alias("max_delta"),
-            F.sum((F.col("_delta") > tol).cast("long")).alias("frontier"),
-        ).first()
-        out.unpersist()
-        max_delta = float(agg["max_delta"] or 0.0)
-        frontier = int(agg["frontier"] or 0)
+        out = carry["state"].groupBy("part").applyInPandas(kernel, _OUT_SCHEMA)
+        ck, m = observed_checkpoint(
+            out,
+            f"{algo_name} superstep it={it}",
+            columns=_STATE_COLUMNS + ["_changed"],
+            max_delta=F.max("_delta"),
+            frontier=F.sum((F.col("_delta") > tol).cast("long")),
+            dangling_mass=dangling_mass,
+            total_contrib=F.sum("c"),
+        )
+        new_state = _carry(ck, m["dangling_mass"])
+        max_delta = float(m["max_delta"] or 0.0)
+        frontier = int(m["frontier"] or 0)
 
-        lineage = spark.createDataFrame(
-            [
-                (
-                    algo_name,
-                    it,
-                    int(r["part"]),
-                    blocks_meta.get(int(r["part"]), 0),
-                    blocks_meta.get(int(r["part"]), 0),
-                    frontier,
-                    blocks_meta.get(int(r["part"]), 0) / mean_edges,
-                )
-                for r in side
-            ],
-            schema="algo string, iteration int, partition_id int, "
-            "edges_scanned long, messages_sent long, frontier_size long, "
-            "skew_ratio double",
+        lineage = pd.DataFrame(
+            {
+                "algo": algo_name,
+                "iteration": it,
+                "partition_id": parts,
+                "edges_scanned": scanned,
+                "messages_sent": scanned,
+                "frontier_size": frontier,
+                "skew_ratio": scanned / mean_edges,
+            }
         )
         metrics = {
             "max_delta": max_delta,
             "frontier": frontier,
-            "dangling_mass": dang,
-            "total_contrib": total_contrib,
+            "dangling_mass": dangling,
+            "total_contrib": float(m["total_contrib"] or 0.0),
             "converged": max_delta < tol,
         }
-        return StepOutcome(new_state.drop("_delta"), lineage, metrics)
+        return StepOutcome(new_state, lineage, metrics)
 
-    result = run_loop(spark, algo_name, cfg, init_state, step, resume=resume)
-    placement.unpersist()
+    result = run_loop(
+        spark, algo_name, cfg, lambda: seed(None), step, resume=resume
+    )
     # canonical (vid, rank) shape
-    state = result.state
-    if "part" in state.columns:
-        state = state.select("vid", "rank")
     return LoopResult(
-        state, result.history, result.iterations, result.converged,
-        result.resumed_from,
+        result.state.select("vid", "rank"), result.history, result.iterations,
+        result.converged, result.resumed_from,
     )

@@ -400,17 +400,16 @@ def cascade_components(
     one kernel pass + boundary reconciliation for split conversations."""
     cfg = cfg or EngineConfig()
     path = pack_path or os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-    _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
+    stats = _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
 
     local = (
         _block_edges(spark, path)
         .groupBy("part")
         .applyInPandas(_components_kernel, "vid long, component long")
     )
-
-    placement = spark.read.parquet(placement_path(path))
-    if placement.isEmpty():
+    if stats["n_replicas"] == 0:
         return local
+    placement = spark.read.parquet(placement_path(path))
 
     # boundary vertices live in several blocks; merge their local labels
     # with a driver-side union-find, then relabel via a broadcast map.
@@ -482,8 +481,7 @@ def cascade_labelprop(
     (vid, label)."""
     cfg = cfg or EngineConfig()
     path = pack_path or os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-    _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
-    placement = spark.read.parquet(placement_path(path))
+    stats = _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
 
     max_iter = fixed_iterations or cfg.max_iterations
     local = (
@@ -493,7 +491,7 @@ def cascade_labelprop(
             _labelprop_kernel_factory(max_iter), "vid long, label long"
         )
     )
-    if placement.isEmpty():
+    if stats["n_replicas"] == 0:
         # no cut edges: every conversation (even size-split ones whose
         # sub-blocks happen to be edge-closed) is exact in-block
         return local
@@ -536,15 +534,14 @@ def cascade_triangles(
     (split-residue hybrid — see module docstring)."""
     cfg = cfg or EngineConfig()
     path = pack_path or os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-    _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
-    placement = spark.read.parquet(placement_path(path))
+    stats = _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
 
     per_vertex = (
         _block_edges(spark, path)
         .groupBy("part")
         .applyInPandas(_triangles_kernel, "vid long, triangles long")
     )
-    if not placement.isEmpty():
+    if stats["n_replicas"] > 0:
         split_edges, split_vids, max_conv = _split_residue(edges, cfg)
         if max_conv <= RESIDUE_KERNEL_MAX_EDGES:
             # same kernel, grouped by conversation — no pack needed

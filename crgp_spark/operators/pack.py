@@ -39,11 +39,13 @@ BLOCK_SCHEMA = (
 
 #: On-disk pack layout version, recorded in ``_pack_stats.json``.
 #: v2 = replica placement in the SIBLING ``<pack>_placement`` dir
-#: (cascade layout; v1 nested it inside the blocks dir). Readers that
-#: reuse an existing pack MUST repack when the recorded version (absent
-#: = v1) differs — reading a v1 pack through v2 paths silently loses
-#: replicas (ADVICE r2).
-PACK_FORMAT_VERSION = 2
+#: (cascade layout; v1 nested it inside the blocks dir). v3 adds the
+#: placement's ``home`` column (the block whose kernel ships each
+#: replica) and the per-block edge counts ``part_edges`` to the stats.
+#: Readers that reuse an existing pack MUST repack when the recorded
+#: version (absent = v1) differs — reading an older pack through newer
+#: paths silently loses replicas (ADVICE r2).
+PACK_FORMAT_VERSION = 3
 
 
 def salted(edges: DataFrame, cfg: EngineConfig) -> DataFrame:

@@ -209,21 +209,17 @@ def pagerank(
 
         max_delta = float(agg["max_delta"] or 0.0)
         frontier = int(agg["frontier"] or 0)
-        lineage = spark.createDataFrame(
-            [
-                (
-                    algo_name,
-                    it,
-                    int(r["part"]),
-                    blocks_meta.get(int(r["part"]), 0),
-                    int(r["messages_sent"]),
-                    frontier,
-                    blocks_meta.get(int(r["part"]), 0) / mean_edges,
-                )
-                for r in part_rows
-            ],
-            schema="algo string, iteration int, partition_id int, edges_scanned long, "
-            "messages_sent long, frontier_size long, skew_ratio double",
+        scanned = [blocks_meta.get(int(r["part"]), 0) for r in part_rows]
+        lineage = pd.DataFrame(
+            {
+                "algo": algo_name,
+                "iteration": it,
+                "partition_id": [int(r["part"]) for r in part_rows],
+                "edges_scanned": scanned,
+                "messages_sent": [int(r["messages_sent"]) for r in part_rows],
+                "frontier_size": frontier,
+                "skew_ratio": [e / mean_edges for e in scanned],
+            }
         )
         metrics = {
             "max_delta": max_delta,

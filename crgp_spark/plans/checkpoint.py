@@ -5,7 +5,9 @@ Layout, per algorithm run::
 
     {root}/{algo}/iter_00007/
         state/      parquet — full snapshot OR delta (changed rows only)
-        lineage/    parquet — one row per graph partition (schemas.LINEAGE)
+        lineage/    parquet — one row per graph partition (schemas.LINEAGE);
+                    a driver-built pandas frame is written by pyarrow,
+                    with no Spark job
         manifest.json   written LAST via tmp+rename → commit point
 
 A checkpoint exists iff its manifest exists (the ``_SUCCESS``-guarded
@@ -28,8 +30,14 @@ import re
 import shutil
 from dataclasses import dataclass
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from crgp_spark.schemas import LINEAGE
 
 _ITER_RE = re.compile(r"^iter_(\d{5})$")
 
@@ -43,6 +51,17 @@ class Checkpoint:
     path: str
 
 
+def _write_lineage_frame(lineage: pd.DataFrame, path: str) -> None:
+    """Write driver-built lineage rows (columns of ``schemas.LINEAGE``)
+    as one parquet file, cast to that schema, without a Spark job."""
+    schema = to_arrow_schema(LINEAGE)
+    table = pa.Table.from_pandas(
+        lineage[schema.names], schema=schema, preserve_index=False
+    )
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+
+
 class CheckpointManager:
     def __init__(self, root: str, algo: str, snapshot_every: int = 5):
         self.dir = os.path.join(root, algo)
@@ -54,7 +73,7 @@ class CheckpointManager:
         self,
         iteration: int,
         state: DataFrame,
-        lineage: DataFrame | None,
+        lineage: DataFrame | pd.DataFrame | None,
         kind: str,
         converged: bool,
         metrics: dict,
@@ -63,7 +82,9 @@ class CheckpointManager:
         if os.path.exists(it_dir):
             shutil.rmtree(it_dir)  # torn previous attempt — no manifest, dead
         state.write.mode("overwrite").parquet(os.path.join(it_dir, "state"))
-        if lineage is not None:
+        if isinstance(lineage, pd.DataFrame):
+            _write_lineage_frame(lineage, os.path.join(it_dir, "lineage"))
+        elif lineage is not None:
             lineage.write.mode("overwrite").parquet(os.path.join(it_dir, "lineage"))
         manifest = {
             "iteration": iteration,

@@ -28,6 +28,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,7 +85,12 @@ def reset_stats(df: DataFrame) -> DataFrame:
     default and keeps planning O(1) per superstep. JVM-side pointer
     surgery only — no data moves, the checkpoint blocks keep backing the
     new frame. Use on every per-superstep checkpoint of a loop that
-    joins state with anything derived from the same state."""
+    joins state with anything derived from the same state.
+
+    The fresh ``LogicalRDD`` also claims no output partitioning, where a
+    checkpoint inherits its origin's: a loop whose kernel emits rows for
+    another partition (cascade replicas) uses it so the next exchange on
+    that key is planned, never skipped."""
     jdf = df._jdf
     new_jdf = df.sparkSession._jsparkSession.internalCreateDataFrame(
         jdf.queryExecution().toRdd(), jdf.schema(), False
@@ -139,7 +145,9 @@ def observed_checkpoint(
 @dataclass
 class StepOutcome:
     state: DataFrame  # vid + value cols + `_changed` bool
-    lineage: DataFrame | None
+    # a distributed frame, or driver-built rows as a pandas frame
+    # (written by CheckpointManager.commit without a Spark job)
+    lineage: DataFrame | pd.DataFrame | None
     metrics: dict
 
 

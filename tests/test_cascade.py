@@ -3,6 +3,9 @@ generic paths, hub-conversation salting, resume."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,6 +79,47 @@ def test_cascade_resume(spark, conv_edges, tmp_path):
         spark, conv_edges, _cfg(tmp_path / "s"), algo_name="pr_straight"
     )
     a = {r["vid"]: r["rank"] for r in res2.state.collect()}
+    b = {r["vid"]: r["rank"] for r in straight.state.collect()}
+    assert set(a) == set(b)
+    assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
+
+
+def test_cascade_resume_with_forced_splits(spark, conv_edges, tmp_path):
+    """Replica rows live only in the loop state: a checkpoint holds one
+    row per vertex, and a resume rebuilds the replicas from it and ends
+    where a straight run ends."""
+    from crgp_spark.plans.checkpoint import CheckpointManager
+
+    split = dict(hub_degree_threshold=50, max_salt=4)
+    cfg = _cfg(tmp_path, max_iterations=3, **split)
+    res1 = pagerank_cascade(spark, conv_edges, cfg, algo_name="pr_split_res")
+    assert not res1.converged and res1.iterations == 3
+    cm = CheckpointManager(cfg.checkpoint_dir, "pr_split_res")
+    stats_file = tmp_path / "pr_split_res" / "graph" / "_pack_stats.json"
+    assert json.loads(stats_file.read_text())["n_replicas"] > 0
+    assert [c.kind for c in cm.checkpoints()] == ["full", "delta"]
+    for c in cm.checkpoints():  # as written, before any fold by vid
+        written = spark.read.parquet(os.path.join(c.path, "state"))
+        assert written.count() == written.select("vid").distinct().count()
+    n_verts = (
+        conv_edges.select("src").union(conv_edges.select("dst")).distinct().count()
+    )
+    assert cm.load_state(spark, cm.checkpoints()[0]).count() == n_verts
+
+    cfg2 = _cfg(tmp_path, max_iterations=100, **split)
+    res2 = pagerank_cascade(
+        spark, conv_edges, cfg2, algo_name="pr_split_res", resume=True
+    )
+    # commits at iterations 0 (full) and 2 (delta): resume folds both
+    assert res2.converged and res2.resumed_from == 2
+
+    straight = pagerank_cascade(
+        spark, conv_edges, _cfg(tmp_path / "s", **split), algo_name="pr_straight"
+    )
+    assert res2.iterations == straight.iterations
+    rows = res2.state.collect()
+    assert len(rows) == n_verts
+    a = {r["vid"]: r["rank"] for r in rows}
     b = {r["vid"]: r["rank"] for r in straight.state.collect()}
     assert set(a) == set(b)
     assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
